@@ -1,8 +1,10 @@
 package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.sources.BaseRelation
 
 import graft.operators._
 
@@ -76,28 +78,67 @@ object SparkEntry {
     * both paths read identically — the fan-out is a no-op there by
     * construction. */
   private def tNoFan(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+    read(s, s"$dir/$name.parquet")
+
+  /** One resolved table of the catalogue: the relation `s.read.parquet`
+    * built — its file listing and inferred schema, never data — stamped
+    * with the path's modification time and length at resolution, plus the
+    * bytes under the path for [[t]]'s fan-out. */
+  private final case class Entry(modTime: Long, length: Long,
+                                 relation: BaseRelation, bytes: Long)
+
+  /** The table catalogue, keyed by (session, path). A warm local
+    * `spark.read.parquet` of one testdata table costs 80-90 ms, most of
+    * it one schema-inference Spark job; through the catalogue a warm build
+    * pays one `getFileStatus` instead (~2 ms). An entry is reused only
+    * while the path's modification time and length are unchanged, so a
+    * table rewritten in place is resolved again. Session confs that steer
+    * schema inference (`spark.sql.legacy.parquet.nanosAsLong`) are read
+    * once, at resolution: set them when the session is built. */
+  private val catalogue =
+    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Entry]()
+
+  private def resolve(s: SparkSession, path: String): Entry = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+    // a missing path gets a stamp no entry carries, so the reader below
+    // runs and raises its usual error
+    val (modTime, length) =
+      try { val st = fs.getFileStatus(p); (st.getModificationTime, st.getLen) }
+      catch { case _: java.io.FileNotFoundException => (-1L, -1L) }
+    catalogue.compute((s, path), (_, old) =>
+      if (old != null && old.modTime == modTime && old.length == length) old
+      else {
+        val relation = s.read.parquet(path).queryExecution.analyzed
+          .collectFirst { case r: LogicalRelation => r.relation }.get
+        // probe failures are IO-specific, not a blanket Throwable (an
+        // OOM/interrupt should surface, not silently skip the fan-out)
+        Entry(modTime, length, relation,
+          try fs.getContentSummary(p).getLength
+          catch { case _: java.io.IOException => Long.MaxValue })
+      })
+  }
+
+  /** A table through the catalogue. Every call returns a fresh frame over
+    * the shared relation, with its own attribute ids — exactly what a
+    * second `s.read.parquet` returns — so two reads of one table join
+    * through Dataset column refs as two independent reads do. */
+  private[graft] def read(s: SparkSession, path: String): DataFrame =
+    s.baseRelationToDataFrame(resolve(s, path).relation)
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame = {
-    val path = s"$dir/$name.parquet"
-    val df = s.read.parquet(path)
+    val entry = resolve(s, s"$dir/$name.parquet")
+    val df = s.baseRelationToDataFrame(entry.relation)
     if (!fanoutEnabled) return df
     FanoutTables.get(name) match {
       case Some(id) =>
-        // r18 (ADVICE): probe failures are IO-specific, not a blanket
-        // Throwable (an OOM/interrupt should surface, not silently skip
-        // the fan-out), and an empty table (0 bytes) has nothing to fan
-        // out — skip it rather than pay a pointless exchange.
-        val bytes = try {
-          val p = new org.apache.hadoop.fs.Path(path)
-          p.getFileSystem(s.sparkContext.hadoopConfiguration)
-            .getContentSummary(p).getLength
-        } catch { case _: java.io.IOException => Long.MaxValue }
         val maxSplit = org.apache.spark.network.util.JavaUtils
           .byteStringAsBytes(
             s.conf.get("spark.sql.files.maxPartitionBytes", "128MB"))
         val par = s.sparkContext.defaultParallelism
-        if (bytes > 0L && bytes / math.max(maxSplit, 1L) < par)
+        // an empty table (0 bytes) has nothing to fan out — skip it
+        // rather than pay a pointless exchange
+        if (entry.bytes > 0L && entry.bytes / math.max(maxSplit, 1L) < par)
           // deterministic hash key, NOT repartition(n): a keyless
           // round-robin first locally sorts every column
           // (sortBeforeRepartition, guide §2.5) on the one scan core —

@@ -6,8 +6,9 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
-    // optional trailing args: run only these queries (local iteration —
-    // the driver always invokes with exactly (sfDir, outDir) = full dump)
+    // optional trailing args: run only these queries, and dump only their
+    // oracle SQL (local iteration — a full correctness run passes exactly
+    // (sfDir, outDir) = full dump)
     val only = args.drop(2).toSet
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
@@ -41,6 +42,7 @@ object Verify {
       case c => c.toString
     } + "\""
     val json = SparkEntry.oracleSql
+      .filter { case (name, _) => only.isEmpty || only(name) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

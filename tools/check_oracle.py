@@ -4,6 +4,10 @@ then this script compares each dumped parquet result against the DuckDB
 oracle (same parquet tables), sorting columns by name and rows by all
 columns, like the driver's hash compare.
 
+A rows-only query (no oracle SQL) that returned no rows fails. Every
+oracle_sql.json key must have an output dir: a query that threw in
+graft.Verify leaves none, and fails here.
+
 Usage: check_oracle.py <verify_out_dir> <sf_dir>
 """
 import sys, os, json, glob
@@ -22,6 +26,10 @@ def main(out, sf):
     failures = 0
     names = sorted(d for d in os.listdir(out)
                    if os.path.isdir(os.path.join(out, d)))
+    for name in sorted(set(oracle) - set(names)):
+        print(f"FAIL {name}: no output dir (did it throw in graft.Verify?)")
+        failures += 1
+    rows_only = [n for n in names if n not in oracle]
     for name in names:
         files = glob.glob(f"{out}/{name}/*.parquet")
         if not files:
@@ -29,8 +37,10 @@ def main(out, sf):
         got = con.sql(
             f"SELECT * FROM read_parquet({files!r})").fetchdf()
         if name not in oracle:
-            print(f"rows {name}: rows-only check, {len(got)} rows"
-                  + (" FAIL(empty)" if len(got) == 0 else " ok"))
+            if len(got) == 0:
+                print(f"FAIL {name}: rows-only check, no rows"); failures += 1
+            else:
+                print(f"rows {name}: rows-only check, {len(got)} rows ok")
             continue
         try:
             exp = con.sql(oracle[name]).fetchdf()
@@ -42,7 +52,9 @@ def main(out, sf):
             print(f"PASS {name} ({len(got)} rows)")
         else:
             print(f"FAIL {name}: {msg}"); failures += 1
-    print(f"\n{len(names) - failures}/{len(names)} pass")
+    total = len(oracle) + len(rows_only)
+    print(f"\n{total - failures}/{total} pass "
+          f"({len(oracle)} oracle + {len(rows_only)} rows-only)")
     sys.exit(1 if failures else 0)
 
 def compare(got, exp):
