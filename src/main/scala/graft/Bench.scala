@@ -3,8 +3,6 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs every SparkEntry query on SPARK_GRAFT_SF_DIR and
   * emits ONE JSON line {"metric":"total","value":N,"unit":"sec",
   * "queries":{...},"warm_total":...,"sf":...} — to stdout AND (in FULL
@@ -156,10 +154,24 @@ object Bench {
   /** Hard cap on the compact stdout line; the driver's window is ~2000. */
   private val MaxStdoutLineBytes = 1900
 
+  /** `s` as a JSON string literal: quote, backslash and EVERY control char
+    * (< 0x20) escaped — a tab or CR in a query name or in oracle SQL would
+    * otherwise make a `json.load` of the artifact fail. */
+  private[graft] def jsonStr(s: String): String =
+    "\"" + s.flatMap {
+      case '"' => "\\\""
+      case '\\' => "\\\\"
+      case '\n' => "\\n"
+      case '\r' => "\\r"
+      case '\t' => "\\t"
+      case c if c < ' ' => f"\\u${c.toInt}%04x"
+      case c => c.toString
+    } + "\""
+
   def main(args: Array[String]): Unit = {
     val jvmT0 = System.nanoTime()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH.out.json")
     // Prior-artifact retry anchor (see RetryPriorAnchor): parse the previous
     // full artifact BEFORE this run's first checkpoint emit overwrites it.
@@ -182,24 +194,9 @@ object Bench {
       } catch { case _: Throwable => Map.empty }
     val budgetSec =
       sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET_SEC", "1500").toDouble
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(cpus, 32).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // The two documented bounded-window queries (TextAnalysis histogram
-    // cumsum + RRF top-pool ranks) emit "No Partition Defined for Window"
-    // WARNs from WindowExec{,Base}; they are provably bounded (see their
-    // scaladoc) but each WARN lands on stdout inside the driver's ~2 KB
-    // tail window and crowds the artifact line. Bench session only:
-    // silence that one logger package, keep every other WARN.
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window",
-      org.apache.logging.log4j.Level.ERROR)
+    GraftSession.quietBoundedWindowWarnings()
 
     def elapsedTotalSec: Double = (System.nanoTime() - jvmT0) / 1e9
 
@@ -254,16 +251,6 @@ object Bench {
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => only.forall(_.contains(n)))
 
-    def jsonStr(s: String): String =
-      "\"" + s.flatMap {
-        case '"' => "\\\""
-        case '\\' => "\\\\"
-        case '\n' => "\\n"
-        case '\r' => "\\r"
-        case '\t' => "\\t"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"
-        case c => c.toString
-      } + "\""
     def timesObj(kvs: Seq[(String, (Double, Option[String]))]): String =
       kvs.map { case (k, (v, _)) => jsonStr(k) + ":" + v }
         .mkString("{", ",", "}")

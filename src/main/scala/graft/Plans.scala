@@ -3,8 +3,6 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-dump main: writes `.explain("formatted")` for named SparkEntry
   * queries to files (optimization-round evidence; the driver never runs
   * this). Args: sfDir outDir suffix name [name...]. Each query's plan goes
@@ -24,14 +22,8 @@ object Plans {
     val names =
       if (rest == Seq("ALL")) SparkEntry.queries.keys.toSeq.sorted
       else rest
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt, 32).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     Files.createDirectories(Paths.get(outDir))
     var failures = 0

@@ -3,8 +3,10 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.Bench.jsonStr
 
 /** Scale-stress bench: measures the scale-critical paths (LSH candidate
   * generation, the full dedup pipeline, sign-LSH kNN, the persisted IVF
@@ -217,14 +219,8 @@ object ScaleBench {
       sys.env.getOrElse("SPARK_GRAFT_SCALE_WORK", "/tmp/graft_scale")
     val outPath =
       sys.env.getOrElse("SPARK_GRAFT_SCALE_OUT", "BENCH_scale.json")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = GraftSession.builder(cpus, 32)
       // The maintenance cells eagerly localCheckpoint stage frames; their
       // blocks are only reclaimed after a JVM GC lets ContextCleaner see
       // the dead RDDs, and the default periodicGC.interval (30min) is
@@ -234,12 +230,7 @@ object ScaleBench {
       .config("spark.cleaner.periodicGC.interval", "60s")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // same rationale as Bench: the bounded-window queries under measure
-    // (doc_quality_buckets' histogram cumsum) spray WindowExec WARNs; keep
-    // this session's stdout artifact-clean without losing other WARNs
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window",
-      org.apache.logging.log4j.Level.ERROR)
+    GraftSession.quietBoundedWindowWarnings()
 
     def scaledDir(f: Int): String =
       if (f == 1) baseDir else s"$workDir/x$f"
@@ -305,14 +296,6 @@ object ScaleBench {
         spark.read.parquet(s"$dir/embeddings.parquet").count()))
     }
 
-    def jsonStr(s: String): String =
-      "\"" + s.flatMap {
-        case '"' => "\\\""
-        case '\\' => "\\\\"
-        case '\n' => "\\n"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"
-        case c => c.toString
-      } + "\""
     def obj(kvs: Seq[(String, String)]): String =
       kvs.map { case (k, v) => jsonStr(k) + ":" + v }.mkString("{", ",", "}")
     def perFactor(sel: Cell => Double): String =

@@ -26,12 +26,12 @@ object FlumeLikeSource {
     * polling-receiver knobs (`maxBatchSize` events per poll and
     * `parallelism` receivers per agent, reference:
     * src/StreamingFlumeProcess.scala:92-101): `maxFilesPerTrigger` caps
-    * how many spool files one micro-batch ingests, `maxBytesPerTrigger`
-    * caps the bytes — the two dials that keep a backlogged spool from
-    * turning the first batch after a restart into an unbounded catch-up
-    * job. `None` = unthrottled (the previous behavior). */
-  case class RateControl(maxFilesPerTrigger: Option[Int] = None,
-                         maxBytesPerTrigger: Option[Long] = None)
+    * how many spool files one micro-batch ingests, which keeps a
+    * backlogged spool from turning the first batch after a restart into an
+    * unbounded catch-up job. `None` = unthrottled. There is no byte cap:
+    * Spark's file source rejects `maxBytesPerTrigger` together with
+    * `maxFilesPerTrigger`. */
+  case class RateControl(maxFilesPerTrigger: Option[Int] = None)
 
   /** Streaming read: Structured Streaming file source (exactly-once file
     * tracking via the query's checkpoint — stronger than the reference's
@@ -41,11 +41,8 @@ object FlumeLikeSource {
     val base = spark.readStream.format("text")
     val withFiles = rate.maxFilesPerTrigger
       .fold(base)(n => base.option("maxFilesPerTrigger", n.toString))
-    val withBytes = rate.maxBytesPerTrigger
-      .fold(withFiles)(n => withFiles.option("maxBytesPerTrigger",
-        n.toString))
     project(
-      withBytes
+      withFiles
         .load(spoolDir)
         .select(col("value"), col("_metadata.file_path").as("path")))
   }

@@ -82,6 +82,30 @@ class CatalogueSpec extends SparkTestBase {
       Seq("[5]", "[6]", "[7]"))
   }
 
+  test("enrich_s62 after events.parquet is overwritten in place returns " +
+    "the new events' rows, not the memoized synthetic lines of the old") {
+    val events = spark.range(1, 601).select(col("id").as("event_id"),
+      (col("id") % 97).as("user_id"),
+      timestamp_seconds(lit(1700000000L) + col("id") * 37).as("ts"))
+    val evenEvents = events.filter(col("event_id") % 2 === 0)
+    // one dimension row per (LAC, CI) key the synthetic lines can carry
+    val nation = spark.range(150).select((col("id") / 5).cast("long")
+      .as("n_nationkey"), (col("id") % 5).as("n_regionkey"),
+      concat(lit("area"), col("id").cast("string")).as("n_name"))
+    val (stale, fresh) = (tmpDir("speclines-stale"), tmpDir("speclines-fresh"))
+    for ((dir, ev) <- Seq(stale -> events, fresh -> evenEvents)) {
+      ev.write.parquet(s"$dir/events.parquet")
+      nation.write.parquet(s"$dir/nation.parquet")
+    }
+    def enrich(dir: String): Seq[String] =
+      sortedRows(SparkEntry.queries("enrich_s62")(spark, dir))
+    val before = enrich(stale)
+    evenEvents.write.mode("overwrite").parquet(s"$stale/events.parquet")
+    val after = enrich(stale)
+    assert(after.nonEmpty && after.size < before.size)
+    assert(after == enrich(fresh))
+  }
+
   test("two catalogue reads of one table join through Dataset column " +
     "refs exactly as two plain reads do") {
     val path = s"${tmpDir("catalogue-identity")}/orders.parquet"
