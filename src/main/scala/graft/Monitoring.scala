@@ -2,6 +2,8 @@ package graft
 
 import java.util.concurrent.ConcurrentHashMap
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQueryListener
@@ -30,10 +32,15 @@ object Monitoring {
   }
 
   /** Streaming listener capturing the last progress per query: batch
-    * duration ms (F10), input rows (F11), and any observed metrics. */
+    * duration ms (F10), input rows (F11), any observed metrics, and the
+    * batch's per-phase durations as Spark reports them (`phaseMs`:
+    * `triggerExecution`, `addBatch`, `walCommit`, `commitOffsets`,
+    * `queryPlanning`, `latestOffset`, … in ms) — the sink-vs-WAL split of
+    * a deployed pipeline without a tracer. */
   final class ProgressCapture extends StreamingQueryListener {
     case class Snapshot(batchId: Long, durationMs: Long, numInputRows: Long,
-                        observed: Map[String, Any])
+                        observed: Map[String, Any],
+                        phaseMs: Map[String, Long])
     private val last = new ConcurrentHashMap[String, Snapshot]()
 
     def snapshot(queryName: String): Option[Snapshot] =
@@ -52,8 +59,9 @@ object Monitoring {
         case None => Map.empty[String, Any]
       }
       val name = Option(p.name).getOrElse(p.id.toString)
+      val phases = p.durationMs.asScala.view.mapValues(_.longValue).toMap
       last.put(name, Snapshot(p.batchId, p.batchDuration, p.numInputRows,
-        obs))
+        obs, phases))
     }
   }
 }

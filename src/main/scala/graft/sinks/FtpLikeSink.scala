@@ -2,6 +2,7 @@ package graft.sinks
 
 import java.io.IOException
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, FileUtil, Path}
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.DataFrame
@@ -85,8 +86,7 @@ class FtpLikeSink(
     sleeper: Option[Long => Unit] = None)
     extends Serializable {
 
-  private def fs(conf: org.apache.hadoop.conf.Configuration,
-                 p: String): FileSystem =
+  private def fs(conf: Configuration, p: String): FileSystem =
     new Path(p).getFileSystem(conf)
 
   private def liveDir(partner: String, batchId: Long) =
@@ -131,12 +131,14 @@ class FtpLikeSink(
     * (partner × staged-file) work list — executor-parallel, driver-free. */
   def writeBatch(df: DataFrame, batchId: Long): Unit = {
     val sc = df.sparkSession.sparkContext
-    val conf = sc.hadoopConfiguration
+    // driver metadata ops, the staging write and the executor commit
+    // copies all resolve `file:` to the fork-free FileSystem
+    val conf = LocalFs.install(new Configuration(sc.hadoopConfiguration))
     val staging = s"$targetRoot/_staging/batch=$batchId"
     val filesystem = fs(conf, targetRoot)
     try {
       sweepOrphans(filesystem, batchId)
-      df.write.mode("overwrite").text(staging)
+      df.write.mode("overwrite").format(LocalFs.TextFormat).save(staging)
       val staged = filesystem.listStatus(new Path(staging))
         .filter(s => s.isFile && !s.getPath.getName.startsWith("_") &&
           !s.getPath.getName.startsWith("."))

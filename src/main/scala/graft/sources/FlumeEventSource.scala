@@ -1,5 +1,8 @@
 package graft.sources
 
+import java.io.{BufferedReader, InputStreamReader}
+import java.nio.charset.{CodingErrorAction, StandardCharsets}
+import java.nio.file.{Files, Paths}
 import java.util
 
 import org.apache.spark.sql.catalyst.InternalRow
@@ -166,16 +169,22 @@ private[sources] class FlumeEventReaderFactory
       : PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[FlumeFilePartition]
     new PartitionReader[InternalRow] {
-      private val lines = java.nio.file.Files.readAllLines(
-        java.nio.file.Paths.get(p.absolutePath),
-        java.nio.charset.StandardCharsets.UTF_8).iterator()
+      // Malformed bytes decode to U+FFFD, as the reference's
+      // `new String(body)` does: a strict decoder would throw, and the
+      // file-count offset would replay the same file into the same throw
+      // on every restart. `readLine` splits lines as `readAllLines` does.
+      private val lines = new BufferedReader(new InputStreamReader(
+        Files.newInputStream(Paths.get(p.absolutePath)),
+        StandardCharsets.UTF_8.newDecoder()
+          .onMalformedInput(CodingErrorAction.REPLACE)
+          .onUnmappableCharacter(CodingErrorAction.REPLACE)))
       private var current: InternalRow = _
 
-      override def next(): Boolean =
-        if (lines.hasNext) {
-          val line = lines.next()
+      override def next(): Boolean = {
+        val line = lines.readLine()
+        if (line != null) {
           current = InternalRow(
-            line.getBytes(java.nio.charset.StandardCharsets.UTF_8),
+            line.getBytes(StandardCharsets.UTF_8),
             new ArrayBasedMapData(
               new GenericArrayData(Array[Any](
                 UTF8String.fromString(FlumeLikeSource.HeaderFileName))),
@@ -183,9 +192,10 @@ private[sources] class FlumeEventReaderFactory
                 UTF8String.fromString(p.fileName)))))
           true
         } else false
+      }
 
       override def get(): InternalRow = current
-      override def close(): Unit = ()
+      override def close(): Unit = lines.close()
     }
   }
 }

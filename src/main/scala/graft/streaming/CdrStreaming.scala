@@ -6,7 +6,7 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger
 import org.apache.spark.sql.Row
 
 import graft.operators.{CdrOps, TableSpec}
-import graft.sinks.FtpLikeSink
+import graft.sinks.{FtpLikeSink, LocalFs}
 
 /** Structured Streaming shell: the reference's DStream jobs re-expressed as
   * streaming queries over the same operator library used in batch.
@@ -58,7 +58,7 @@ object CdrStreaming {
     routed
       .select("value", "dt", "record_type")
       .writeStream
-      .format("text")
+      .format(LocalFs.TextFormat)
       .partitionBy("dt", "record_type")
       .option("path", outDir)
       .option("maxRecordsPerFile", maxRecordsPerFile.toString)
@@ -143,7 +143,7 @@ object CdrStreaming {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val b = batch.persist()
         try {
-          b.write.mode("append").partitionBy("dt").format("text")
+          b.write.mode("append").partitionBy("dt").format(LocalFs.TextFormat)
             .save(archiveDir)
           sink.writeBatch(b.select("value"), batchId)
         } finally { b.unpersist(); () }
@@ -165,7 +165,7 @@ object CdrStreaming {
                     maxRecordsPerFile: Int = 100000): StreamingQuery =
     fileValue
       .writeStream
-      .format("text")
+      .format(LocalFs.TextFormat)
       .partitionBy("file")
       .option("path", outDir)
       .option("maxRecordsPerFile", maxRecordsPerFile.toString)

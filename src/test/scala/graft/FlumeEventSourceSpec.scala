@@ -65,6 +65,26 @@ class FlumeEventSourceSpec extends SparkTestBase {
     } finally q.stop()
   }
 
+  test("V2 source: a malformed UTF-8 byte reads as U+FFFD; every line " +
+    "arrives and the query stays up") {
+    val dir = tmpDir("v2bad")
+    Files.write(Paths.get(dir, "m-001.log"),
+      "ok1\nbad".getBytes(StandardCharsets.UTF_8) ++ Array(0xFF.toByte) ++
+        "byte\nok3".getBytes(StandardCharsets.UTF_8))
+    val q = FlumeLikeSource.toFileValue(readStreamV2(dir))
+      .writeStream.format("memory").queryName("v2_bad")
+      .trigger(Trigger.ProcessingTime(0)).start()
+    try {
+      q.processAllAvailable()
+      drop(dir, "m-002.log", Seq("next"))
+      q.processAllAvailable()
+      val rows = spark.sql("SELECT value FROM v2_bad").collect()
+        .map(_.getString(0)).sorted.toSeq
+      assert(rows == Seq("bad\uFFFDbyte", "next", "ok1", "ok3"))
+      assert(q.isActive && q.exception.isEmpty)
+    } finally q.stop()
+  }
+
   test("V2 source restart recovery: a NEW query on the same checkpoint " +
     "resumes from the committed file offset — no dupes, no gaps") {
     val dir = tmpDir("v2restart")

@@ -33,6 +33,12 @@ class MonitoringConfigSpec extends SparkTestBase {
       assert(snap.get.observed.get("n_records").contains(3L) ||
         snap.get.observed.get("n_records").exists(_ == 3L))
       assert(snap.get.durationMs >= 0)
+      // per-phase durations of the batch, as Spark reports them
+      val phases = snap.get.phaseMs
+      Seq("triggerExecution", "addBatch", "walCommit", "commitOffsets",
+        "queryPlanning", "latestOffset").foreach(k =>
+        assert(phases.contains(k), s"$k missing from $phases"))
+      assert(phases("addBatch") <= phases("triggerExecution"))
     } finally s.streams.removeListener(listener)
   }
 

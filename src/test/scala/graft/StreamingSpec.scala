@@ -2,12 +2,14 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.hadoop.fs.FileSystem
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.operators.{CdrOps, TableSpec}
-import graft.sinks.FtpLikeSink
+import graft.sinks.{ForkFreeRawLocalFileSystem, FtpLikeSink}
 import graft.sources.FlumeLikeSource
 import graft.streaming.CdrStreaming
 
@@ -212,6 +214,49 @@ class StreamingSpec extends SparkTestBase {
     val partner = s.read.textFile(s"$target/partner1/batch=0")
       .collect().sorted
     assert(partner.toSeq == lines.sorted.toSeq)
+  }
+
+  test("CDR writers create their files through the fork-free local " +
+    "FileSystem: routedArchive, FtpLikeSink.writeBatch and the " +
+    "flumeDesensitize archive") {
+    val s = spark
+    import s.implicits._
+    implicit val ctx = s.sqlContext
+    @annotation.nowarn("cat=deprecation")
+    def bytesWritten(): Long = FileSystem.getStatistics("file",
+      classOf[ForkFreeRawLocalFileSystem]).getBytesWritten
+    def rises(what: String)(body: => Unit): Unit = {
+      val before = bytesWritten()
+      body
+      assert(bytesWritten() > before, what)
+    }
+    rises("routedArchive") {
+      val input = MemoryStream[String]
+      val q = CdrStreaming.routedArchive(input.toDF(), tmpDir("ffarc"),
+        tmpDir("ffarccp"), Trigger.ProcessingTime(0))
+      input.addData(CdrFixtures.s61Lines.filter(_.nonEmpty))
+      q.processAllAvailable()
+      q.stop()
+    }
+    rises("FtpLikeSink.writeBatch") {
+      new FtpLikeSink(tmpDir("fftgt"), tmpDir("ffdead"), Seq("p1"))
+        .writeBatch(Seq("r1", "r2").toDF("value"), 0L)
+    }
+    // a sink that delivers nothing: every counted write is the archive's
+    val idle = new FtpLikeSink(tmpDir("ffgntgt"), tmpDir("ffgndead"),
+        Seq("p1")) {
+      override def writeBatch(df: DataFrame, batchId: Long): Unit = ()
+    }
+    rises("flumeDesensitize archive") {
+      val spool = tmpDir("ffgnspool")
+      Files.write(Paths.get(spool, "2015101509540700756011117.txt"),
+        (1 to 3).map(CdrFixtures.gnLine).mkString("\n").getBytes)
+      val q = CdrStreaming.flumeDesensitize(
+        FlumeLikeSource.readStream(s, spool), tmpDir("ffgnarch"), idle,
+        tmpDir("ffgncp"), Trigger.ProcessingTime(0))
+      q.processAllAvailable()
+      q.stop()
+    }
   }
 
   test("Sessionize: flatMapGroupsWithState emits sessions on gap close " +
