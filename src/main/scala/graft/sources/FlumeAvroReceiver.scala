@@ -4,7 +4,6 @@ import java.net.InetSocketAddress
 import java.nio.ByteBuffer
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import java.util.concurrent.atomic.AtomicLong
 
 import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
@@ -34,19 +33,16 @@ import org.apache.avro.ipc.generic.{GenericRequestor, GenericResponder}
   * lives in a separate artifact (`avro-ipc-netty`) not present in this
   * environment. Protocol-compatible, transport-pluggable.
   *
-  * Received events land as spool files in [[FlumeLikeSource]]'s contract
-  * (one event body per line, originating filename carried by the [sic]
-  * `flieName` header), so the EXISTING ingestion pipeline — the
-  * Structured Streaming file source with exactly-once file tracking, or
-  * the full DataSource V2 [[FlumeEventSource]] with admission control —
-  * picks them up unchanged: network RPC → durable spool → streaming
-  * query, with the spool as the replayable hand-off point (a receiver
-  * that feeds memory instead would re-introduce the receiver-loss
-  * semantics the SURVEY's redesign removed). Files commit tmp+rename
-  * (the [[graft.sinks.FtpLikeSink]] discipline) so the file source never
-  * lists a partial file; spool names get a per-receiver uniquifying
-  * suffix — the reference itself salts its output names (SURVEY F9), and
-  * the downstream `flieName` header keeps the original name as its stem.
+  * Received events land as spool files read by [[FlumeEventSource]]
+  * (one event body per line, originating filename in the [sic]
+  * `flieName` header): network RPC → durable spool → streaming query,
+  * with the spool as the replayable hand-off point (a receiver that feeds
+  * memory instead would re-introduce the receiver-loss semantics the
+  * SURVEY's redesign removed). Commits keep the spool contract stated in
+  * [[FlumeEventSource]]: tmp+rename, one at a time, into
+  * `<sequence>-<stem>` names whose 19-digit sequence continues from the
+  * spool's highest after a restart, so name order is commit order. The
+  * stem is the sanitized `flieName`.
   *
   * Bodies are treated as UTF-8 single-line records (the reference
   * pipeline's own assumption — its events are delimited CDR lines); a
@@ -98,7 +94,8 @@ object FlumeAvroReceiver {
     * than tearing down the connection. */
   final class SpoolingResponder(spoolDir: String)
       extends GenericResponder(protocol) {
-    private val seq = new AtomicLong(0L)
+    // highest sequence committed; guarded by `this`
+    private var seq: Long = lastSequence(Paths.get(spoolDir))
 
     override def respond(message: Protocol#Message,
                          request: AnyRef): AnyRef =
@@ -143,13 +140,14 @@ object FlumeAvroReceiver {
       }
     }
 
-    /** tmp+rename into a not-yet-existing `<stem>.<n>` name. */
-    private def commit(dir: Path, stem: String, bytes: Array[Byte]): Unit = {
+    /** tmp+rename into the next `<sequence>-<stem>` name; synchronized,
+      * as avro-ipc serves each connection on its own thread. */
+    private def commit(dir: Path, stem: String,
+                       bytes: Array[Byte]): Unit = synchronized {
       val tmpDir = dir.resolve(".tmp")
       Files.createDirectories(tmpDir)
-      var target: Path = null
-      do target = dir.resolve(s"$stem.${seq.incrementAndGet()}")
-      while (Files.exists(target))
+      seq += 1
+      val target = dir.resolve(f"$seq%019d-$stem")
       val tmp = tmpDir.resolve(target.getFileName.toString)
       Files.write(tmp, bytes)
       try Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE)
@@ -157,6 +155,13 @@ object FlumeAvroReceiver {
         Files.move(tmp, target) }
     }
   }
+
+  private val SpoolName = """(\d{19})-.*""".r
+
+  /** The highest sequence among the spool's committed files, 0 if none. */
+  private def lastSequence(dir: Path): Long =
+    Option(dir.toFile.list()).toSeq.flatten
+      .collect { case SpoolName(n) => n.toLong }.maxOption.getOrElse(0L)
 
   /** Start a receiver on `port` (0 = ephemeral; read it back from
     * [[org.apache.avro.ipc.Server#getPort]]), spooling into `spoolDir`.

@@ -9,37 +9,35 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
+import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxFiles, SupportsAdmissionControl}
 import org.apache.spark.sql.types.{BinaryType, MapType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-/** A REAL DataSource V2 streaming source for Flume-event-shaped input —
-  * the custom-source work SURVEY §4 item 1 calls for (`TableProvider` +
-  * `MicroBatchStream`), replacing nothing in [[FlumeLikeSource]] (the
-  * thin file-source adapter remains the simple path) but proving the
-  * full connector surface: schema inference, capability declaration,
-  * offset tracking, admission control, and executor-side partition
-  * readers.
+/** The one spool reader: a DataSource V2 source (`TableProvider` →
+  * `Batch` + `MicroBatchStream`, SURVEY §4 item 1) that turns a spool
+  * directory into Flume-event-shaped rows for [[FlumeLikeSource.read]]
+  * and [[FlumeLikeSource.readStream]] alike.
   *
   * Semantics mirror the reference's polling receiver
   * (reference: src/StreamingFlumeProcess.scala:89-101): each line of each
   * spool file becomes one event `(body: binary, headers: map)` with the
-  * originating filename under the reference's [sic] `flieName` header key
-  * (:117-121). `maxFilesPerTrigger` is the `maxBatchSize` analogue,
-  * enforced through Spark's own admission-control hook
-  * ([[SupportsAdmissionControl]], the same mechanism the built-in file
-  * source uses) rather than ad-hoc state.
+  * literal originating filename under the reference's [sic] `flieName`
+  * header key (:117-121). `maxFilesPerTrigger` (a positive integer) is the
+  * `maxBatchSize` analogue, enforced through Spark's own admission-control
+  * hook ([[SupportsAdmissionControl]], as the built-in file source does).
   *
-  * Offset model: the spool contract (Flume's own spooldir convention) is
-  * that files are immutable once dropped and their names sort
-  * monotonically (timestamped names) — so "the first N sorted files are
-  * processed" is a complete, restart-safe offset. The offset serializes
-  * as `{"n":N}` into the checkpoint; recovery replans from file N without
-  * rescanning content. At 100 TB the same model holds: listing is
-  * O(files), reading is partitioned per file across executors, and no
-  * state grows with file CONTENT.
+  * Offset model: `{"n":N}` in the checkpoint means "the first N files in
+  * name order are processed"; recovery replans from file N without
+  * rescanning content. Listing is O(files), reading is partitioned per
+  * file, and no state grows with file CONTENT. The count is a complete,
+  * restart-safe offset only under the spool contract (Flume's spooldir
+  * convention): a file is renamed in whole and never changed or removed
+  * after; names starting with `.` or `_` (in-flight uploads) are
+  * invisible; and each file renamed in sorts after every visible one, so
+  * name order is arrival order (`<stem>.<n>` names break it: `x.10` sorts
+  * before `x.9`; see [[FlumeAvroReceiver]]'s sequence-first names).
   *
   * Usage:
   * {{{
@@ -59,7 +57,7 @@ class FlumeEventSource extends TableProvider {
     require(path != null && path.nonEmpty,
       "FlumeEventSource requires a 'path' option (the spool directory)")
     new FlumeEventTable(path,
-      Option(opts.get("maxFilesPerTrigger")).map(_.trim.toInt))
+      Option(opts.get("maxFilesPerTrigger")).map(FlumeEventSource.positive))
   }
 }
 
@@ -70,17 +68,25 @@ object FlumeEventSource {
     StructField("headers", MapType(StringType, StringType),
       nullable = false)))
 
-  /** Sorted spool listing — the offset's file order. Regular files only;
-    * hidden/temp files (dot or `_` prefix, the in-flight upload
-    * convention) are invisible until renamed in, which is what makes
-    * count-of-sorted-files a stable offset under concurrent drops. */
-  private[sources] def listSpool(dir: String): Seq[java.io.File] = {
-    val d = new java.io.File(dir)
-    Option(d.listFiles()).getOrElse(Array.empty)
+  /** The spool's files, one partition each, in name order — the
+    * offset's file order. Regular files only; hidden/temp files (dot or
+    * `_` prefix) are invisible until renamed in. */
+  private[sources] def listSpool(dir: String): Array[InputPartition] =
+    Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
       .filter(f => f.isFile && !f.getName.startsWith(".") &&
         !f.getName.startsWith("_"))
-      .sortBy(_.getName).toSeq
-  }
+      .sortBy(_.getName)
+      .map(f =>
+        FlumeFilePartition(f.getAbsolutePath, f.getName): InputPartition)
+
+  /** `maxFilesPerTrigger` must be positive: 0 would never advance the
+    * stream (the end offset is `start + n`), and a negative value would
+    * end a batch before it starts. */
+  private[sources] def positive(raw: String): Int =
+    raw.trim.toIntOption.filter(_ > 0).getOrElse(
+      throw new IllegalArgumentException(
+        s"Invalid value '$raw' for option 'maxFilesPerTrigger': " +
+          "it must be a positive integer"))
 }
 
 private[sources] class FlumeEventTable(path: String, maxFiles: Option[Int])
@@ -88,13 +94,20 @@ private[sources] class FlumeEventTable(path: String, maxFiles: Option[Int])
   override def name(): String = s"flume-events($path)"
   override def schema(): StructType = FlumeEventSource.Schema
   override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.MICRO_BATCH_READ)
+    util.EnumSet.of(TableCapability.BATCH_READ,
+      TableCapability.MICRO_BATCH_READ)
 
   override def newScanBuilder(options: CaseInsensitiveStringMap)
       : ScanBuilder =
     new ScanBuilder {
       override def build(): Scan = new Scan {
         override def readSchema(): StructType = FlumeEventSource.Schema
+        override def toBatch(): Batch = new Batch {
+          override def planInputPartitions(): Array[InputPartition] =
+            FlumeEventSource.listSpool(path)
+          override def createReaderFactory(): PartitionReaderFactory =
+            new FlumeEventReaderFactory
+        }
         override def toMicroBatchStream(checkpointLocation: String)
             : MicroBatchStream =
           new FlumeEventMicroBatchStream(path, maxFiles)
@@ -128,7 +141,7 @@ private[sources] class FlumeEventMicroBatchStream(path: String,
     * through Spark's own rate-limit hook. */
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     val s = start.asInstanceOf[FileCountOffset].n
-    val total = FlumeEventSource.listSpool(path).size
+    val total = FlumeEventSource.listSpool(path).length
     limit match {
       case m: ReadMaxFiles => FileCountOffset(
         math.min(total, s + m.maxFiles()))
@@ -146,8 +159,6 @@ private[sources] class FlumeEventMicroBatchStream(path: String,
     val s = start.asInstanceOf[FileCountOffset].n
     val e = end.asInstanceOf[FileCountOffset].n
     FlumeEventSource.listSpool(path).slice(s, e)
-      .map(f => FlumeFilePartition(f.getAbsolutePath, f.getName)
-        : InputPartition).toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =

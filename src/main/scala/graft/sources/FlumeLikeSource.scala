@@ -10,66 +10,43 @@ import org.apache.spark.sql.functions._
   * The reference pulls these events from Flume agents over Avro RPC
   * (`FlumeUtils.createPollingStream`, reference:
   * src/StreamingFlumeProcess.scala:89-101) and unions the per-agent streams
-  * (:102). With no Flume/Avro dependency available, the connector boundary is
-  * re-drawn at a spool DIRECTORY: each file dropped there becomes a stream of
-  * events (one per line), `body` = line bytes, filename in the header — the
-  * same contract the downstream pipeline consumes
-  * (src/StreamingFlumeProcess.scala:117-121).
-  *
-  * Batch twin reads the same layout for tests/backfill.
+  * (:102). Here the connector boundary is a spool DIRECTORY (fed by files
+  * dropped there or by [[FlumeAvroReceiver]]), read for batch and stream
+  * alike by [[FlumeEventSource]]: one event per line, `body` = line bytes,
+  * filename in the header (src/StreamingFlumeProcess.scala:117-121).
   */
 object FlumeLikeSource {
 
   val HeaderFileName = "flieName" // [sic] reference key
 
-  /** Per-poll rate control — the adapter equivalent of the reference's
-    * polling-receiver knobs (`maxBatchSize` events per poll and
-    * `parallelism` receivers per agent, reference:
-    * src/StreamingFlumeProcess.scala:92-101): `maxFilesPerTrigger` caps
-    * how many spool files one micro-batch ingests, which keeps a
-    * backlogged spool from turning the first batch after a restart into an
-    * unbounded catch-up job. `None` = unthrottled. There is no byte cap:
-    * Spark's file source rejects `maxBytesPerTrigger` together with
-    * `maxFilesPerTrigger`. */
-  case class RateControl(maxFilesPerTrigger: Option[Int] = None)
-
-  /** Streaming read: Structured Streaming file source (exactly-once file
-    * tracking via the query's checkpoint — stronger than the reference's
-    * receiver replication) → (body, headers). */
+  /** Streaming read with exactly-once file tracking through the query's
+    * checkpoint — stronger than the reference's receiver replication.
+    * `maxFilesPerTrigger` caps the spool files one micro-batch ingests,
+    * the reference's per-poll `maxBatchSize` knob (:92-101), so a
+    * backlogged spool does not turn the first batch after a restart into
+    * an unbounded catch-up job. `None` = unthrottled. */
   def readStream(spark: SparkSession, spoolDir: String,
-                 rate: RateControl = RateControl()): DataFrame = {
-    val base = spark.readStream.format("text")
-    val withFiles = rate.maxFilesPerTrigger
+                 maxFilesPerTrigger: Option[Int] = None): DataFrame = {
+    val base = spark.readStream.format(classOf[FlumeEventSource].getName)
+      .option("path", spoolDir)
+    maxFilesPerTrigger
       .fold(base)(n => base.option("maxFilesPerTrigger", n.toString))
-    project(
-      withFiles
-        .load(spoolDir)
-        .select(col("value"), col("_metadata.file_path").as("path")))
+      .load()
   }
 
   /** Union of several spool directories into one event stream — the
     * reference's per-agent stream union (`ssc.union(buf)`, reference:
     * src/StreamingFlumeProcess.scala:89-102): bag semantics, no dedup, no
-    * shuffle (a union is a plan-level concat of sources). `rate` applies
-    * PER SOURCE, like the reference's per-agent `maxBatchSize`. */
+    * shuffle. `maxFilesPerTrigger` applies PER SOURCE, like the
+    * reference's per-agent `maxBatchSize`. */
   def readStreamUnion(spark: SparkSession, spoolDirs: Seq[String],
-                      rate: RateControl = RateControl()): DataFrame =
-    spoolDirs.map(readStream(spark, _, rate)).reduce(_.union(_))
+                      maxFilesPerTrigger: Option[Int] = None): DataFrame =
+    spoolDirs.map(readStream(spark, _, maxFilesPerTrigger)).reduce(_.union(_))
 
-  /** Batch twin over the same spool layout. */
+  /** Batch read of the same spool, for tests and backfill. */
   def read(spark: SparkSession, spoolDir: String): DataFrame =
-    project(
-      spark.read
-        .format("text")
-        .load(spoolDir)
-        .select(col("value"), col("_metadata.file_path").as("path")))
-
-  private def project(df: DataFrame): DataFrame =
-    df.select(
-      encode(col("value"), "UTF-8").as("body"),
-      map(
-        lit(HeaderFileName),
-        element_at(split(col("path"), "/"), -1)).as("headers"))
+    spark.read.format(classOf[FlumeEventSource].getName)
+      .option("path", spoolDir).load()
 
   /** The reference's event→(file, value) projection
     * (src/StreamingFlumeProcess.scala:117-121). */

@@ -4,7 +4,7 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.sources.{FlumeEventSource, FlumeLikeSource}
 
@@ -16,13 +16,6 @@ class FlumeEventSourceSpec extends SparkTestBase {
     Files.write(Paths.get(dir, name),
       lines.mkString("\n").getBytes(StandardCharsets.UTF_8))
 
-  private def readStreamV2(dir: String, maxFiles: Option[Int] = None) = {
-    val base = spark.readStream
-      .format(classOf[FlumeEventSource].getName).option("path", dir)
-    maxFiles.fold(base)(n => base.option("maxFilesPerTrigger", n.toString))
-      .load()
-  }
-
   test("V2 source: lines become (body, headers[flieName]) events; " +
     "hidden/temp files are invisible") {
     val dir = tmpDir("v2spool")
@@ -30,7 +23,7 @@ class FlumeEventSourceSpec extends SparkTestBase {
     drop(dir, "b-002.log", Seq("r3"))
     drop(dir, ".inflight", Seq("nope"))
     drop(dir, "_tmp_upload", Seq("nope"))
-    val q = readStreamV2(dir)
+    val q = FlumeLikeSource.readStream(spark, dir)
       .select(decode(col("body"), "UTF-8").as("value"),
         element_at(col("headers"), FlumeLikeSource.HeaderFileName)
           .as("file"))
@@ -49,7 +42,7 @@ class FlumeEventSourceSpec extends SparkTestBase {
     "per micro-batch under maxFilesPerTrigger=1, nothing dropped") {
     val dir = tmpDir("v2rate")
     (1 to 3).foreach(i => drop(dir, f"f-$i%03d.log", Seq(s"line$i")))
-    val q = readStreamV2(dir, maxFiles = Some(1))
+    val q = FlumeLikeSource.readStream(spark, dir, Some(1))
       .select(decode(col("body"), "UTF-8").as("value"))
       .writeStream.format("memory").queryName("v2_rate")
       .trigger(Trigger.ProcessingTime(0)).start()
@@ -65,13 +58,32 @@ class FlumeEventSourceSpec extends SparkTestBase {
     } finally q.stop()
   }
 
+  test("V2 source: a maxFilesPerTrigger that is not a positive integer " +
+    "is rejected at query start, naming the option and the value") {
+    val dir = tmpDir("v2badrate")
+    drop(dir, "f-001.log", Seq("line1"))
+    Seq("0", "-1", "abc").foreach { v =>
+      var q: StreamingQuery = null
+      try {
+        val e = intercept[IllegalArgumentException] {
+          q = spark.readStream.format(classOf[FlumeEventSource].getName)
+            .option("path", dir).option("maxFilesPerTrigger", v).load()
+            .writeStream.format("noop")
+            .trigger(Trigger.ProcessingTime(0)).start()
+        }
+        assert(e.getMessage.contains("'maxFilesPerTrigger'") &&
+          e.getMessage.contains(s"'$v'"), e.getMessage)
+      } finally if (q != null) q.stop()
+    }
+  }
+
   test("V2 source: a malformed UTF-8 byte reads as U+FFFD; every line " +
     "arrives and the query stays up") {
     val dir = tmpDir("v2bad")
     Files.write(Paths.get(dir, "m-001.log"),
       "ok1\nbad".getBytes(StandardCharsets.UTF_8) ++ Array(0xFF.toByte) ++
         "byte\nok3".getBytes(StandardCharsets.UTF_8))
-    val q = FlumeLikeSource.toFileValue(readStreamV2(dir))
+    val q = FlumeLikeSource.toFileValue(FlumeLikeSource.readStream(spark, dir))
       .writeStream.format("memory").queryName("v2_bad")
       .trigger(Trigger.ProcessingTime(0)).start()
     try {
@@ -90,7 +102,7 @@ class FlumeEventSourceSpec extends SparkTestBase {
     val dir = tmpDir("v2restart")
     val cp = tmpDir("v2cp")
     val out = tmpDir("v2out")
-    def start() = readStreamV2(dir)
+    def start() = FlumeLikeSource.readStream(spark, dir)
       .select(decode(col("body"), "UTF-8").as("value"))
       .writeStream.format("parquet")
       .option("path", out).option("checkpointLocation", cp)

@@ -301,12 +301,17 @@ class StreamingSpec extends SparkTestBase {
     Files.write(Paths.get(spool, "2015101509540700756011117.txt"),
       s"${CdrFixtures.gnLine(1)}\n${CdrFixtures.gnLine(2)}".getBytes)
     Files.write(Paths.get(spool, "f2.txt"), CdrFixtures.gnLine(3).getBytes)
+    // the header carries the literal name, not a URL-encoded path segment
+    Files.write(Paths.get(spool, "cdr a#1.log"),
+      CdrFixtures.gnLine(4).getBytes)
     val batch = FlumeLikeSource.toFileValue(FlumeLikeSource.read(s, spool))
     val got = batch.collect().map(r => (r.getString(0), r.getString(1)))
-    assert(got.length == 3)
+    assert(got.length == 4)
     assert(got.count(_._1 == "2015101509540700756011117.txt") == 2)
     assert(got.exists(r => r._1 == "f2.txt" &&
       r._2 == CdrFixtures.gnLine(3)))
+    assert(got.exists(r => r._1 == "cdr a#1.log" &&
+      r._2 == CdrFixtures.gnLine(4)), got.map(_._1).distinct.mkString(", "))
 
     implicit val ctx = s.sqlContext
     val stream = FlumeLikeSource.toFileValue(
@@ -335,8 +340,7 @@ class StreamingSpec extends SparkTestBase {
     val batchSizes = scala.collection.mutable.ArrayBuffer.empty[Long]
     val seen = scala.collection.mutable.ArrayBuffer.empty[String]
     val q = FlumeLikeSource.toFileValue(
-      FlumeLikeSource.readStream(s, spool,
-        FlumeLikeSource.RateControl(maxFilesPerTrigger = Some(1))))
+      FlumeLikeSource.readStream(s, spool, maxFilesPerTrigger = Some(1)))
       .writeStream
       .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
         val rows = b.select("value").as[String].collect()
