@@ -1,12 +1,14 @@
 package graft.streaming
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import org.apache.spark.sql.Row
 
 import graft.operators.{CdrOps, TableSpec}
-import graft.sinks.{FtpLikeSink, LocalFs}
+import graft.sinks.{BatchCommit, FtpLikeSink, LocalFs}
 
 /** Structured Streaming shell: the reference's DStream jobs re-expressed as
   * streaming queries over the same operator library used in batch.
@@ -143,14 +145,31 @@ object CdrStreaming {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val b = batch.persist()
         try {
-          b.write.mode("append").partitionBy("dt").format(LocalFs.TextFormat)
-            .save(archiveDir)
+          archiveBatch(b, archiveDir, batchId)
           sink.writeBatch(b.select("value"), batchId)
         } finally { b.unpersist(); () }
       }
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .start()
+  }
+
+  /** One batch into the archive: its lines of day `d` sit in
+    * `dt=<d>/batch-<id>/`, published once by [[BatchCommit]] (a replay
+    * adds no line twice), all through the fork-free local FileSystem. */
+  private def archiveBatch(b: DataFrame, archiveDir: String,
+                           batchId: Long): Unit = {
+    val root = new Path(archiveDir)
+    val fs = root.getFileSystem(LocalFs.install(
+      new Configuration(b.sparkSession.sparkContext.hadoopConfiguration)))
+    BatchCommit(fs, root, batchId) { staging =>
+      b.write.partitionBy("dt").format(LocalFs.TextFormat)
+        .save(staging.toString)
+      fs.listStatus(staging).toSeq.map(_.getPath)
+        .filter(_.getName.startsWith("dt="))
+        .map(day => day -> new Path(root, s"${day.getName}/batch-$batchId"))
+    }
+    ()
   }
 
   /** Group-by-source-file archive (replaces K8, the Flume-side

@@ -1,18 +1,18 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.sinks.BatchCommit
+
 /** The persisted-mergeable-state commit protocol shared by every online
-  * materialized-view maintainer ([[StreamingStats]], [[StreamingCms]]):
-  * a state directory holds one parquet state table plus a `CURRENT`
-  * marker naming the last applied batch id. Apply = merge the batch's
-  * additive increment into the current state, write the result under the
-  * NEW batch id, then repoint the marker tmp+rename style (the
-  * [[graft.sinks.FtpLikeSink]] discipline) — a reader never sees a
-  * half-written state, and a `foreachBatch` REPLAY of an already-applied
-  * batch observes `CURRENT >= batchId` and no-ops, which is what makes
-  * the at-least-once callback exactly-once in effect.
+  * materialized-view maintainer ([[StreamingStats]], [[StreamingCms]], …):
+  * the current state is the newest `state-<batch id>` parquet table. Apply
+  * = merge the batch's additive increment into it and publish the result
+  * as `state-<batch id>` with one [[BatchCommit]] rename — never a
+  * half-written or a missing current state. A `foreachBatch` REPLAY finds
+  * a version `>= batchId` and no-ops: the at-least-once callback is
+  * exactly-once in effect. A state directory belongs to one checkpoint.
   *
   * The state semantics (what an increment is, how two states merge) stay
   * with the caller as functions — this object owns only the idempotence
@@ -20,7 +20,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object MergeableState {
 
-  private val Current = "CURRENT"
+  private val Version = """state-(\d+)""".r
 
   /** Merge `increment` (the batch already reduced to its additive state
     * form) into the state under `stateDir` with `merge`; returns false
@@ -30,32 +30,27 @@ object MergeableState {
                  merge: (DataFrame, DataFrame) => DataFrame): Boolean = {
     val root = new Path(stateDir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val cur = current(spark, stateDir)
+    val cur = versions(fs, root).lastOption
     if (cur.exists(_._1 >= batchId)) return false // replayed batch
     val inc = increment
     val merged = cur match {
-      case Some((_, dir)) => merge(spark.read.parquet(dir), inc)
+      case Some((_, dir)) => merge(spark.read.parquet(dir.toString), inc)
       case None => inc
     }
     val next = new Path(root, s"state-$batchId")
-    merged.coalesce(1).write.mode("overwrite").parquet(next.toString)
-    // repoint atomically: tmp marker + rename over the old one
-    val tmp = new Path(root, s"$Current.tmp")
-    val out = fs.create(tmp, true)
-    out.write(batchId.toString.getBytes("UTF-8"))
-    out.close()
-    fs.delete(new Path(root, Current), false)
-    fs.rename(tmp, new Path(root, Current))
+    BatchCommit(fs, root, batchId) { staging =>
+      val dir = new Path(staging, next.getName)
+      merged.coalesce(1).write.parquet(dir.toString)
+      Seq(dir -> next)
+    }
     // Retain exactly ONE superseded version: a reader that resolved
     // `current()` just before this commit may still be mid-read on the
     // previous state parquet — deleting it here would yank the files out
     // from under that read. Keep {new, just-superseded}, delete anything
     // older; the dir never holds more than two versions.
     val keep = cur.map(_._1).toSet + batchId
-    fs.listStatus(root).map(_.getPath)
-      .filter(p => p.getName.startsWith("state-") &&
-        !keep.contains(p.getName.stripPrefix("state-").toLong))
-      .foreach(p => fs.delete(p, true))
+    versions(fs, root).filterNot(v => keep(v._1))
+      .foreach(v => fs.delete(v._2, true))
     true
   }
 
@@ -63,12 +58,17 @@ object MergeableState {
   def current(spark: SparkSession,
               stateDir: String): Option[(Long, String)] = {
     val root = new Path(stateDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val marker = new Path(root, Current)
-    if (!fs.exists(marker)) return None
-    val in = fs.open(marker)
-    val id = try scala.io.Source.fromInputStream(in).mkString.trim.toLong
-    finally in.close()
-    Some((id, new Path(root, s"state-$id").toString))
+    versions(root.getFileSystem(spark.sparkContext.hadoopConfiguration),
+      root).lastOption.map { case (id, dir) => (id, dir.toString) }
   }
+
+  /** The published versions under `root`, oldest first. */
+  private def versions(fs: FileSystem, root: Path): Seq[(Long, Path)] =
+    if (!fs.exists(root)) Seq.empty
+    else fs.listStatus(root).toSeq.flatMap { st =>
+      st.getPath.getName match {
+        case Version(id) => Some((id.toLong, st.getPath))
+        case _ => None
+      }
+    }.sortBy(_._1)
 }

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.MetadataBuilder
 
 import graft.operators.Dedup
 
@@ -12,8 +13,8 @@ import graft.operators.Dedup
   * grows, and a bloom filter is the textbook mergeable state (set bits
   * only ever turn on; per-word OR is associative, commutative,
   * idempotent). Each micro-batch of documents reduces to ITS word table
-  * and ORs into the persisted state via [[MergeableState]]'s idempotent
-  * tmp+rename commit; [[report]] is bit-for-bit the batch export over
+  * and ORs into the persisted state via [[MergeableState]]'s publish-once
+  * commit; [[report]] is bit-for-bit the batch export over
   * everything ingested (spec-proven, including a duplicate fp appearing
   * in two different batches — idempotent OR makes re-insertion
   * invisible).
@@ -27,41 +28,31 @@ object StreamingBloom {
     * under `stateDir`; returns false when `batchId` was already applied
     * (replay no-op).
     *
-    * The filter geometry (mBits, k) is persisted next to the state on
-    * first apply and ENFORCED on every later one: two filters with
-    * different geometries live in different bit-position spaces, so a
-    * caller who changed either dial between batches would silently OR
-    * incompatible word tables into a filter with FALSE NEGATIVES — the
-    * one failure mode a bloom filter must never have. */
+    * The filter geometry (mBits, k) travels inside the state it describes
+    * — as metadata of its `bits` column, published by the same rename —
+    * and is ENFORCED on every apply: two filters with different geometries
+    * live in different bit-position spaces, so a caller who changed either
+    * dial between batches would silently OR incompatible word tables into
+    * a filter with FALSE NEGATIVES — the one failure mode a bloom filter
+    * must never have. */
   def applyBatch(spark: SparkSession, stateDir: String, batch: DataFrame,
                  batchId: Long, mBits: Long = 1L << 16,
                  k: Int = 4): Boolean = {
-    val root = new org.apache.hadoop.fs.Path(stateDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val geomPath = new org.apache.hadoop.fs.Path(root, "GEOMETRY")
-    val geom = s"$mBits,$k"
-    if (fs.exists(geomPath)) {
-      val in = fs.open(geomPath)
-      val existing =
-        try scala.io.Source.fromInputStream(in).mkString.trim
-        finally in.close()
+    val geom = new MetadataBuilder()
+      .putLong("mBits", mBits).putLong("k", k.toLong).build()
+    MergeableState.current(spark, stateDir).foreach { case (_, dir) =>
+      val existing = spark.read.parquet(dir).schema("bits").metadata
       require(existing == geom,
         s"bloom geometry mismatch at $stateDir: state built with " +
-          s"(mBits,k)=($existing), caller passed ($geom) — merging " +
+          s"${existing.json}, caller passed ${geom.json} — merging " +
           "would corrupt the filter with false negatives")
     }
-    val applied = MergeableState.applyBatch(spark, stateDir, batchId,
-      Dedup.bloomExport(
-        batch.select(md5(col("text")).as("fp")).distinct(), mBits, k),
-      (cur, inc) => Dedup.bloomMergeWords(Seq(cur, inc)))
-    if (applied && !fs.exists(geomPath)) {
-      val tmp = new org.apache.hadoop.fs.Path(root, "GEOMETRY.tmp")
-      val out = fs.create(tmp, true)
-      out.write(geom.getBytes("UTF-8"))
-      out.close()
-      fs.rename(tmp, geomPath)
-    }
-    applied
+    def stamped(words: DataFrame) =
+      words.withColumn("bits", col("bits").as("bits", geom))
+    MergeableState.applyBatch(spark, stateDir, batchId,
+      stamped(Dedup.bloomExport(
+        batch.select(md5(col("text")).as("fp")).distinct(), mBits, k)),
+      (cur, inc) => stamped(Dedup.bloomMergeWords(Seq(cur, inc))))
   }
 
   /** The live word table off the maintained state — the state IS the

@@ -1,9 +1,11 @@
 package graft.streaming
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
+
+import graft.sinks.BatchCommit
 
 /** Incremental deduplication for a DOCUMENT STREAM — the streaming twin of
   * `operators.Dedup.exact`: a training-data pipeline doesn't re-scan its
@@ -85,29 +87,30 @@ object StreamingDedup {
   /** The unbounded-stream answer the watermarked variant's scaladoc names:
     * watermark-bounded state catches SHORT-window repeats cheaply, and a
     * per-batch fp-store COMPACTION catches the long tail — every delivered
-    * batch's fingerprints are appended to the store at `fpStorePath`, and
+    * batch's fingerprints are published to the store at `fpStorePath`, and
     * each batch anti-joins the store read FRESH (so a duplicate arriving
     * AFTER the watermark delay, when its dropDuplicates state is long
     * evicted, is still dropped by the store probe). State is bounded by the
     * watermark; the store is bounded by the number of DISTINCT documents
     * ever seen — the right asymptote for an unbounded crawl stream.
     *
-    * Delivery is `deliver(novelDocs, batchId)` BEFORE the store append:
+    * Delivery is `deliver(novelDocs, batchId)` BEFORE the store commit:
     * a crash between the two replays the batch and delivers again
     * (at-least-once, the standard foreachBatch contract — deliver
-    * idempotently, e.g. FtpLikeSink's tmp+rename); the reverse order would
-    * LOSE the batch on replay (fps already in the store would anti-join the
-    * docs away before their only delivery). Store appends after a crash may
-    * duplicate fp rows — harmless: the probe `.distinct()`s, and a
-    * periodic rewrite can compact the store files offline.
+    * idempotently, e.g. [[graft.sinks.FtpLikeSink]]); the reverse order
+    * would LOSE the batch on replay. Each batch's fps are published once
+    * ([[graft.sinks.BatchCommit]]) as `batch-<id>.parquet` at the store
+    * root — still a flat parquet dir, read together with a seeded corpus —
+    * so a replay adds no fp rows and re-delivers exactly the docs its
+    * published fps name instead of anti-joining them away.
     *
     * Scale shape per batch: one fresh store scan, prefiltered by a bloom
     * over the BATCH's fingerprints ([[graft.operators.Dedup.bloomAntiJoinFp]]
     * — the store scan is a map-only codegen'd `might_contain` probe that
     * emits only fps colliding with the batch, so the store is never
     * shuffled and never broadcast whole; the exact anti-join against the
-    * ≤|batch|+FP survivors settles it), one batch-local dedup, one append
-    * of ≤|batch| fp rows. The stream is never shuffled against the corpus
+    * ≤|batch|+FP survivors settles it), one batch-local dedup, one file of
+    * ≤|batch| fp rows. The stream is never shuffled against the corpus
     * text — only 32-char fingerprints ever cross stages.
     *
     * Returns the configured `DataStreamWriter` — caller sets checkpoint /
@@ -121,20 +124,29 @@ object StreamingDedup {
       .dropDuplicatesWithinWatermark("fp")
     deduped.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
       val s = batch.sparkSession
-      val storePath = new org.apache.hadoop.fs.Path(fpStorePath)
-      val fs = storePath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      val known =
-        if (fs.exists(storePath))
-          s.read.parquet(fpStorePath).select(col("fp")).distinct()
-        else
-          s.createDataFrame(s.sparkContext.emptyRDD[Row],
-            StructType(Seq(StructField("fp", StringType))))
-      val novel = graft.operators.Dedup
-        .bloomAntiJoinFp(batch.dropDuplicates("fp"), known)
-        .persist()
+      val store = new Path(fpStorePath)
+      val fs = store.getFileSystem(s.sparkContext.hadoopConfiguration)
+      val committed = new Path(store, s"batch-$batchId.parquet")
+      val replayed = fs.exists(committed)
+      val novel = (
+        if (replayed) batch.dropDuplicates("fp").join(
+          s.read.parquet(committed.toString), Seq("fp"), "left_semi")
+        else {
+          fs.mkdirs(store)
+          graft.operators.Dedup.bloomAntiJoinFp(batch.dropDuplicates("fp"),
+            s.read.schema("fp STRING").parquet(fpStorePath).distinct())
+        }).persist()
       try {
         deliver(novel, batchId)
-        novel.select(col("fp")).write.mode("append").parquet(fpStorePath)
+        // a replay writes nothing, but Spark requires the stateful dedup
+        // to run over every partition of the batch all the same
+        if (replayed) novel.count()
+        else BatchCommit(fs, store, batchId) { staging =>
+          novel.select(col("fp")).coalesce(1).write.parquet(staging.toString)
+          fs.listStatus(staging).toSeq.map(_.getPath)
+            .filter(_.getName.startsWith("part-")).map(_ -> committed)
+        }
+        ()
       } finally novel.unpersist()
     }
   }

@@ -10,8 +10,8 @@ import graft.operators.TextAnalysis
   * for exactly this: [[TextAnalysis.mgCombine]] is a true mergeable-
   * summary merge (Agarwal et al., PODS 2012 — the bound composes over
   * ANY merge tree), so per-micro-batch partial summaries fold into a
-  * persisted ≤(k+1)-row state via [[MergeableState]]'s idempotent
-  * tmp+rename commit, and the running summary ALWAYS satisfies the MG
+  * persisted ≤(k+1)-row state via [[MergeableState]]'s publish-once
+  * commit, and the running summary ALWAYS satisfies the MG
   * contract over everything ingested so far: every token with true
   * frequency > N/(k+1) is present, every estimate sits in
   * [true − N/(k+1), true]. The state never grows with the stream — k

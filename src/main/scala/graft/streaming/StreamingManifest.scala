@@ -14,7 +14,7 @@ import graft.operators.CorpusOps
   * slices' manifests mod-adds their checksums), which makes the batch
   * manifest its own mergeable state: applyBatch reduces the incoming
   * micro-batch to ITS manifest and merges counter-wise into the
-  * persisted state via [[MergeableState]]'s idempotent tmp+rename
+  * persisted state via [[MergeableState]]'s publish-once
   * commit.
   *
   * The operational point at 100 TB: the manifest a drop validation

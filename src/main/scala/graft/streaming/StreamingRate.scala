@@ -12,7 +12,7 @@ import graft.operators.Timeseries
   * (event_type, hour) counts ([[Timeseries.hourlyCounts]] — two slices of
   * a feed merge by summing per cell, so batch boundaries and late
   * arrivals within an hour are invisible to the result) and merges into
-  * the persisted state via [[MergeableState]]'s idempotent tmp+rename
+  * the persisted state via [[MergeableState]]'s publish-once
   * commit. The anomaly report is computed FROM the state on demand by
   * the IDENTICAL grid+test code the batch operator runs, so the online
   * report is row-identical to `rateAnomaly` over the full feed — the

@@ -6,13 +6,14 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.operators.TextAnalysis
+import graft.sinks.BatchCommit
 
 /** The inverted index maintained ONLINE — the LSM shape: a bucketed BASE
   * table (built by [[TextAnalysis.searchWriteIndex]], the batch compaction
-  * job) plus a DELTA directory of per-batch postings, each committed by
-  * atomic tmp+rename keyed on batchId (the [[graft.sinks.FtpLikeSink]]
-  * idempotency discipline — a replayed batch finds its directory already
-  * present and no-ops, so restarts never double-index).
+  * job) plus a DELTA directory of per-batch postings, each published once
+  * by [[graft.sinks.BatchCommit]] keyed on batchId — a replayed batch
+  * finds its directory already present and no-ops, so restarts never
+  * double-index.
   *
   * The probe serves base ∪ delta through the IDENTICAL scoring core as the
   * batch op, with the delta's corpus stats derived from its own postings —
@@ -32,30 +33,22 @@ object StreamingSearch {
   private def fs(spark: SparkSession, dir: String) =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Commit one batch's postings into the delta: returns false (no-op) on
-    * a replayed batchId. Crash-safe: a kill before the rename leaves only
-    * a tmp directory, which the next attempt overwrites; the rename is
-    * the commit point. A rename that FAILS (transient FS error,
-    * permissions) while the target is still absent is thrown, not
-    * swallowed — otherwise the foreachBatch would complete, the streaming
-    * checkpoint would advance, and the batch would silently never be
-    * indexed (permanent loss in the delta path). The false return is
-    * reserved for the one benign case: the target already exists, i.e. a
-    * replay racing a concurrent committer of the same batchId. */
+  /** Commit one batch's postings into the delta as `batch-<id>` through
+    * [[BatchCommit]]: returns false (no-op, no job) on a replayed batchId.
+    * A kill before the publish rename leaves only staging, which the next
+    * attempt clears; a rename that fails while the target is still absent
+    * throws, so the stream replays the batch instead of advancing its
+    * checkpoint past an unindexed batch. */
   def applyBatch(spark: SparkSession, deltaDir: String, batch: DataFrame,
                  batchId: Long): Boolean = {
+    val root = new Path(deltaDir)
     val f = fs(spark, deltaDir)
-    f.mkdirs(new Path(deltaDir))
-    val target = new Path(deltaDir, s"batch-$batchId")
-    if (f.exists(target)) return false
-    val tmp = new Path(deltaDir, s"_tmp-batch-$batchId")
-    TextAnalysis.searchPostings(batch)
-      .write.mode("overwrite").parquet(tmp.toString)
-    if (f.rename(tmp, target)) true
-    else if (f.exists(target)) false
-    else throw new java.io.IOException(
-      s"delta commit rename failed for batch $batchId: $tmp -> $target " +
-        "(target absent — failing the batch so the stream replays it)")
+    val target = new Path(root, s"batch-$batchId")
+    !f.exists(target) && BatchCommit(f, root, batchId) { staging =>
+      val dir = new Path(staging, target.getName)
+      TextAnalysis.searchPostings(batch).write.parquet(dir.toString)
+      Seq(dir -> target)
+    }.nonEmpty
   }
 
   /** Serve BM25 over base ∪ delta. Delta stats are derived from the delta

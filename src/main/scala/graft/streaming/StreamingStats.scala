@@ -19,9 +19,9 @@ import graft.operators.CorpusOps
   * replay a batch after a failure (offsets commit after user code), so
   * each apply writes the state with the applied batch id in the directory
   * name and a retry of batch N observes N already applied and no-ops.
-  * The swap is write-new-then-repoint (a `CURRENT` marker file), the
-  * tmp+rename discipline of [[graft.sinks.FtpLikeSink]] — a reader never
-  * sees a half-written state.
+  * Each version is published by one rename
+  * ([[graft.sinks.BatchCommit]]) — a reader never sees a half-written
+  * state.
   */
 object StreamingStats {
 

@@ -1,0 +1,33 @@
+package graft
+
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Keeps the publish-once commit single: `BatchCommit` is the one code
+  * path that makes a sink's or a streaming maintainer's output visible, so
+  * no writer can drift back to its own tmp+rename, marker file or append
+  * that a replayed batch would duplicate. */
+class CommitPolicySpec extends AnyFunSuite {
+
+  test("no writer under graft/sinks or graft/streaming renames, appends " +
+    "or keeps a CURRENT marker or .inprogress/.old dir outside BatchCommit") {
+    val hand = ("""\.rename\s*\(|mode\s*\(\s*"append"\s*\)|"CURRENT"|""" +
+      """\.inprogress\b|\.old\b""").r
+    val files = Seq("sinks", "streaming").flatMap { d =>
+      val dir = Paths.get(s"src/main/scala/graft/$d")
+      assert(Files.isDirectory(dir), s"$dir not found from the working dir")
+      val walk = Files.walk(dir)
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally walk.close()
+    }
+    assert(files.exists(_.getFileName.toString == "BatchCommit.scala"))
+    val offenders = files
+      .filter(_.getFileName.toString != "BatchCommit.scala")
+      .filter(p => hand.findFirstIn(Files.readString(p)).isDefined)
+    assert(offenders.isEmpty, "publish through BatchCommit: " +
+      offenders.mkString(", "))
+  }
+}

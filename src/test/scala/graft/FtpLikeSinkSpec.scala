@@ -35,19 +35,12 @@ object FtpLikeSinkSpec {
       if (chaosArmed.get()) throw new CommitChaosError else fs.rename(a, b)
 
   /** Publish seam: performs the first `okCalls` publish renames for real,
-    * then throws — models a driver crash BETWEEN the publish rename-aside
-    * and rename-in (okCalls=1 for a single partner). Driver-side only. */
+    * then throws — models a driver crash after some partners of a batch
+    * are published and before the rest are. Driver-side only. */
   def crashingPublish(key: String): (FileSystem, Path, Path) => Boolean =
     (fs: FileSystem, a: Path, b: Path) =>
       if (failCounts.get(key).getAndDecrement() > 0) fs.rename(a, b)
       else throw new CommitChaosError
-
-  /** Publish seam: rename-aside real, rename-in reports false (soft
-    * publish failure — the sink must restore the previous delivery). */
-  def lyingPublish(key: String): (FileSystem, Path, Path) => Boolean =
-    (fs: FileSystem, a: Path, b: Path) =>
-      if (failCounts.get(key).getAndDecrement() > 0) fs.rename(a, b)
-      else false
 
   /** Sleeper seam: records every backoff wait (ms) instead of sleeping.
     * Static for the same serialization reason as [[failCounts]]. */
@@ -190,88 +183,98 @@ class FtpLikeSinkSpec extends SparkTestBase {
     assert(residue.isEmpty)
   }
 
+  /** Name → bytes and modification time of every file of a batch dir. */
+  private def snapshot(dir: java.nio.file.Path): Map[String, (Seq[Byte], Long)] =
+    Files.list(dir).toArray.map(_.asInstanceOf[java.nio.file.Path])
+      .map(f => f.getFileName.toString ->
+        ((Files.readAllBytes(f).toSeq, Files.getLastModifiedTime(f).toMillis)))
+      .toMap
+
   test("crashed redelivery preserves the previous delivery: no " +
     "destroy-then-fail window, staging cleaned even on failure") {
     val target = tmpDir("sink7")
     val dead = tmpDir("dl7")
-    // delivery 1: published
-    new FtpLikeSink(target, dead, Seq("yaxin", "yiyang"))
+    val partners = Seq("yaxin", "yiyang")
+    new FtpLikeSink(target, dead, partners)
       .writeBatch(df(Seq("old1", "old2")), 9L)
-    // delivery 2 of the same batch id crashes mid-commit
+    val published = partners.map(p => snapshot(Paths.get(target, p, "batch=9")))
     chaosArmed.set(true)
-    val chaosSink = new FtpLikeSink(target, dead, Seq("yaxin", "yiyang"),
+    val chaosSink = new FtpLikeSink(target, dead, partners,
       renameOp = Some(chaosRename))
+    val sc = spark.sparkContext
     try {
+      // redelivery of a published id returns without a commit: no Spark
+      // job runs, so the armed crash never fires
+      sc.setJobGroup("ftp_redeliver9", "redelivery of a published batch")
+      try chaosSink.writeBatch(df(Seq("new1", "new2")), 9L)
+      finally sc.clearJobGroup()
+      assert(sc.statusTracker.getJobIdsForGroup("ftp_redeliver9").isEmpty)
+      // a delivery of an unpublished id crashes mid-commit
       intercept[Exception] { // SparkException wrapping the task crash
-        chaosSink.writeBatch(df(Seq("new1", "new2")), 9L)
+        chaosSink.writeBatch(df(Seq("new1", "new2")), 10L)
       }
     } finally chaosArmed.set(false)
-    // downstream pollers still see the FULL previous delivery
-    Seq("yaxin", "yiyang").foreach { p =>
-      val lines = spark.read.textFile(s"$target/$p/batch=9").collect().sorted
-      assert(lines.toSeq == Seq("old1", "old2"),
-        s"partner $p lost the previous delivery")
-    }
-    // and the staging dir did not leak despite the crash
-    assert(!Files.exists(Paths.get(target, "_staging", "batch=9")))
-    // a later clean redelivery replaces the batch atomically
-    new FtpLikeSink(target, dead, Seq("yaxin", "yiyang"))
-      .writeBatch(df(Seq("new1", "new2")), 9L)
-    Seq("yaxin", "yiyang").foreach { p =>
-      val lines = spark.read.textFile(s"$target/$p/batch=9").collect().sorted
+    // the published copy is byte-identical, the crashed id left no live
+    // dir, and the staging dir did not leak despite the crash
+    assert(partners.map(p => snapshot(Paths.get(target, p, "batch=9"))) ==
+      published)
+    partners.foreach(p =>
+      assert(!Files.exists(Paths.get(target, p, "batch=10"))))
+    assert(!Files.exists(Paths.get(target, "_staging", "batch=10")))
+    // a clean replay of the crashed id publishes it
+    new FtpLikeSink(target, dead, partners)
+      .writeBatch(df(Seq("new1", "new2")), 10L)
+    partners.foreach { p =>
+      val lines = spark.read.textFile(s"$target/$p/batch=10").collect().sorted
       assert(lines.toSeq == Seq("new1", "new2"))
-      assert(visible(Paths.get(target, p)).forall(_.contains("batch=9")))
+      assert(spark.read.textFile(s"$target/$p/batch=9").collect().sorted
+        .toSeq == Seq("old1", "old2"))
+      assert(visible(Paths.get(target, p)).map(_.split("/").last).sorted ==
+        Seq("batch=10", "batch=9"))
     }
   }
 
-  test("publish crash between rename-aside and rename-in: the previous " +
-    "delivery survives complete in .old (never zero copies on disk); " +
-    "redelivery publishes and clears the parked copy") {
+  test("publish crash after partner 1 of 2: replay publishes only partner 2") {
     val target = tmpDir("sink9")
     val dead = tmpDir("dl9")
-    new FtpLikeSink(target, dead, Seq("yaxin"))
-      .writeBatch(df(Seq("old1", "old2")), 5L)
-    // call 1 (rename live → .old) succeeds; call 2 (rename-in) crashes hard
-    // (an Error escapes the restore catch — a true driver-death model)
+    val partners = Seq("yaxin", "yiyang")
+    // publish 1 (yaxin) succeeds; publish 2 (yiyang) crashes hard
     failCounts.put("pubcrash", new AtomicInteger(1))
-    val crashing = new FtpLikeSink(target, dead, Seq("yaxin"),
+    val crashing = new FtpLikeSink(target, dead, partners,
       publishRenameOp = Some(crashingPublish("pubcrash")))
     intercept[CommitChaosError] {
-      crashing.writeBatch(df(Seq("new1", "new2")), 5L)
+      crashing.writeBatch(df(Seq("v1", "v2")), 5L)
     }
-    // the live dir is gone, but a COMPLETE previous delivery is parked
-    assert(!Files.exists(Paths.get(target, "yaxin", "batch=5")))
-    val parked = s"$target/yaxin/.batch=5.old"
-    assert(Files.exists(Paths.get(parked)), "previous delivery lost")
-    assert(spark.read.textFile(parked).collect().sorted.toSeq ==
-      Seq("old1", "old2"))
-    // checkpoint-driven redelivery of the same id heals: new data live,
-    // no hidden residue left behind
-    new FtpLikeSink(target, dead, Seq("yaxin"))
-      .writeBatch(df(Seq("new1", "new2")), 5L)
-    assert(spark.read.textFile(s"$target/yaxin/batch=5").collect()
-      .sorted.toSeq == Seq("new1", "new2"))
-    val hidden = Files.list(Paths.get(target, "yaxin")).toArray
-      .map(_.toString).filter(_.split("/").last.startsWith("."))
-    assert(hidden.isEmpty, s"hidden residue: ${hidden.mkString(",")}")
+    val first = Paths.get(target, "yaxin", "batch=5")
+    assert(Files.exists(first))
+    assert(!Files.exists(Paths.get(target, "yiyang", "batch=5")))
+    val published = snapshot(first)
+    // checkpoint-driven replay of the same id: partner 1 untouched, only
+    // partner 2 is written and published, nothing left in staging
+    new FtpLikeSink(target, dead, partners)
+      .writeBatch(df(Seq("v1", "v2")), 5L)
+    assert(snapshot(first) == published)
+    partners.foreach(p =>
+      assert(spark.read.textFile(s"$target/$p/batch=5").collect()
+        .sorted.toSeq == Seq("v1", "v2")))
+    assert(!Files.exists(Paths.get(target, "_staging", "batch=5")))
   }
 
-  test("failed publish rename (returns false) restores the previous " +
-    "delivery to the live dir before failing the batch") {
+  test("failed publish rename with target absent throws, no live dir left") {
     val target = tmpDir("sink11")
     val dead = tmpDir("dl11")
-    new FtpLikeSink(target, dead, Seq("yaxin"))
-      .writeBatch(df(Seq("old1")), 6L)
-    failCounts.put("publie", new AtomicInteger(1)) // aside ok, rename-in lies
     val lying = new FtpLikeSink(target, dead, Seq("yaxin"),
-      publishRenameOp = Some(lyingPublish("publie")))
+      publishRenameOp = Some((_: FileSystem, _: Path, _: Path) => false))
     intercept[java.io.IOException] {
       lying.writeBatch(df(Seq("new1")), 6L)
     }
-    // the sink rolled the parked copy straight back: old delivery is LIVE
+    assert(!Files.exists(Paths.get(target, "yaxin", "batch=6")))
+    assert(!Files.exists(Paths.get(target, "_staging", "batch=6")))
+    // the replay publishes
+    new FtpLikeSink(target, dead, Seq("yaxin"))
+      .writeBatch(df(Seq("new1")), 6L)
     assert(spark.read.textFile(s"$target/yaxin/batch=6").collect().toSeq ==
-      Seq("old1"))
-    assert(!Files.exists(Paths.get(target, "yaxin", ".batch=6.old")))
+      Seq("new1"))
   }
 
   test("orphaned hidden dirs of strictly-older batch ids are swept by the " +
@@ -279,19 +282,18 @@ class FtpLikeSinkSpec extends SparkTestBase {
     val target = tmpDir("sink10")
     val sink = new FtpLikeSink(target, tmpDir("dl10"), Seq("yaxin"))
     sink.writeBatch(df(Seq("a")), 1L)
-    // a crashed delivery of batch 2 whose query was abandoned for good,
-    // plus a stale parked copy of batch 0
-    Files.createDirectories(Paths.get(target, "yaxin", ".batch=2.inprogress"))
-    Files.write(Paths.get(target, "yaxin", ".batch=2.inprogress", "part-x"),
-      "zzz".getBytes)
-    Files.createDirectories(Paths.get(target, "yaxin", ".batch=0.old"))
-    // a hidden dir of a NEWER id (still deliverable) must survive the sweep
-    Files.createDirectories(Paths.get(target, "yaxin", ".batch=9.inprogress"))
+    // staging left by a crashed delivery of batch 2 whose query was
+    // abandoned for good, and by one of batch 0
+    val staging = Paths.get(target, "_staging")
+    Files.createDirectories(staging.resolve("batch=2/yaxin"))
+    Files.write(staging.resolve("batch=2/yaxin/part-x"), "zzz".getBytes)
+    Files.createDirectories(staging.resolve("batch=0"))
+    // staging of a NEWER id (still deliverable) must survive the sweep
+    Files.createDirectories(staging.resolve("batch=9"))
     sink.writeBatch(df(Seq("b")), 4L)
-    val hidden = Files.list(Paths.get(target, "yaxin")).toArray
-      .map(_.toString.split("/").last).filter(_.startsWith(".")).toSet
-    assert(hidden == Set(".batch=9.inprogress"),
-      s"sweep kept/dropped the wrong dirs: $hidden")
+    val left = Files.list(staging).toArray
+      .map(_.toString.split("/").last).toSet
+    assert(left == Set("batch=9"), s"sweep kept/dropped the wrong dirs: $left")
     // published deliveries are intact
     assert(spark.read.textFile(s"$target/yaxin/batch=1").collect().toSeq ==
       Seq("a"))
