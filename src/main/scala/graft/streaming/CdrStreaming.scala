@@ -4,8 +4,7 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.operators.{CdrOps, TableSpec}
 import graft.sinks.{BatchCommit, FtpLikeSink, LocalFs}
@@ -39,7 +38,7 @@ object CdrStreaming {
     * field when parseable, else the batch processing date. Unknown prefixes
     * land in their own partitions — nothing is dropped from the archive. */
   def routedArchive(lines: DataFrame, outDir: String, checkpointDir: String,
-                    trigger: Trigger = Trigger.ProcessingTime("20 seconds"),
+                    trigger: Trigger = MicroBatch.Interval,
                     maxRecordsPerFile: Int = 100000)
       : StreamingQuery = {
     // try_element_at: archive-only prefixes are free-form — a short or empty
@@ -76,18 +75,12 @@ object CdrStreaming {
     * broadcast hash join inside every batch). */
   def enrichToPartners(lines: DataFrame, spec: TableSpec, dim: DataFrame,
                        sink: FtpLikeSink, checkpointDir: String,
-                       trigger: Trigger = Trigger.ProcessingTime("20 seconds"))
-      : StreamingQuery = {
-    CdrOps.enrichPipeline(lines, spec, dim)
-      .select(concat_ws(",", col("*")).as("value"))
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        sink.writeBatch(batch, batchId)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
-  }
+                       trigger: Trigger = MicroBatch.Interval)
+      : StreamingQuery =
+    MicroBatch.start(
+      CdrOps.enrichPipeline(lines, spec, dim)
+        .select(concat_ws(",", col("*")).as("value")),
+      checkpointDir, trigger)(sink.writeBatch)
 
   /** Raw pass-through partner delivery — the reference's LIVE behavior: its
     * enrichment legs are commented out and every raw record is shipped
@@ -98,17 +91,11 @@ object CdrStreaming {
     * logical table's records; `None` ships everything. */
   def rawToPartners(lines: DataFrame, sink: FtpLikeSink, checkpointDir: String,
                     prefix: Option[String] = None,
-                    trigger: Trigger = Trigger.ProcessingTime("20 seconds"))
+                    trigger: Trigger = MicroBatch.Interval)
       : StreamingQuery = {
     val routed = prefix.fold(lines)(p => CdrOps.routeTo(lines, p))
-    routed.select(col("value"))
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        sink.writeBatch(batch, batchId)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
+    MicroBatch.start(routed.select(col("value")), checkpointDir, trigger)(
+      sink.writeBatch)
   }
 
   /** The Flume-path lifecycle end-to-end (reference
@@ -122,7 +109,7 @@ object CdrStreaming {
     * (src/DesenPross.scala:167-176). */
   def flumeDesensitize(events: DataFrame, archiveDir: String,
                        sink: FtpLikeSink, checkpointDir: String,
-                       trigger: Trigger = Trigger.ProcessingTime("20 seconds"),
+                       trigger: Trigger = MicroBatch.Interval,
                        project: Boolean = false): StreamingQuery = {
     import graft.sources.FlumeLikeSource
     val spec = TableSpec.gn44
@@ -141,17 +128,13 @@ object CdrStreaming {
       if (project) CdrOps.projectFields(withDtCol, TableSpec.gn44Projection)
       else withDtCol
     val withDt = CdrOps.rejoin(shaped, "|").select("value", "dt")
-    withDt.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val b = batch.persist()
-        try {
-          archiveBatch(b, archiveDir, batchId)
-          sink.writeBatch(b.select("value"), batchId)
-        } finally { b.unpersist(); () }
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
+    MicroBatch.start(withDt, checkpointDir, trigger) { (batch, batchId) =>
+      val b = batch.persist()
+      try {
+        archiveBatch(b, archiveDir, batchId)
+        sink.writeBatch(b.select("value"), batchId)
+      } finally { b.unpersist(); () }
+    }
   }
 
   /** One batch into the archive: its lines of day `d` sit in
@@ -180,7 +163,7 @@ object CdrStreaming {
     * Input: (file, value) rows from [[graft.sources.FlumeLikeSource]]. */
   def archiveByFile(fileValue: DataFrame, outDir: String,
                     checkpointDir: String,
-                    trigger: Trigger = Trigger.ProcessingTime("20 seconds"),
+                    trigger: Trigger = MicroBatch.Interval,
                     maxRecordsPerFile: Int = 100000): StreamingQuery =
     fileValue
       .writeStream

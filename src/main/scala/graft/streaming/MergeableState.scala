@@ -1,7 +1,8 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 import graft.sinks.BatchCommit
 
@@ -15,8 +16,12 @@ import graft.sinks.BatchCommit
   * exactly-once in effect. A state directory belongs to one checkpoint.
   *
   * The state semantics (what an increment is, how two states merge) stay
-  * with the caller as functions — this object owns only the idempotence
-  * and atomicity of the apply.
+  * with the caller as functions — this object owns the idempotence and
+  * atomicity of the apply, and how the state is read: [[read]] returns
+  * the current state, or, before the first batch, an empty frame of the
+  * caller's declared state schema. A report is its finalize over
+  * [[read]] in both cases, so an empty report has the columns and types
+  * of a full one.
   */
 object MergeableState {
 
@@ -61,6 +66,15 @@ object MergeableState {
     versions(root.getFileSystem(spark.sparkContext.hadoopConfiguration),
       root).lastOption.map { case (id, dir) => (id, dir.toString) }
   }
+
+  /** The current state under `stateDir`; an empty frame of `schema` (a
+    * DDL string) when no batch has been applied yet. */
+  def read(spark: SparkSession, stateDir: String,
+           schema: String): DataFrame =
+    current(spark, stateDir).fold(spark.createDataFrame(
+      java.util.List.of[Row](), StructType.fromDDL(schema))) {
+      case (_, dir) => spark.read.parquet(dir)
+    }
 
   /** The published versions under `root`, oldest first. */
   private def versions(fs: FileSystem, root: Path): Seq[(Long, Path)] =

@@ -24,6 +24,9 @@ import graft.operators.Dedup
   * is a full-table read of ≤ mBits/8 bytes, any time, no corpus scan. */
 object StreamingBloom {
 
+  /** The [[Dedup.bloomExport]] word table. */
+  val State = "word_idx BIGINT, bits BIGINT"
+
   /** Apply one batch of raw documents to the persisted word-table state
     * under `stateDir`; returns false when `batchId` was already applied
     * (replay no-op).
@@ -56,26 +59,15 @@ object StreamingBloom {
   }
 
   /** The live word table off the maintained state — the state IS the
-    * export (empty frame with the right schema before the first batch). */
+    * export. */
   def report(spark: SparkSession, stateDir: String): DataFrame =
-    MergeableState.current(spark, stateDir) match {
-      case Some((_, dir)) => spark.read.parquet(dir)
-      case None =>
-        spark.range(0).select(col("id").as("word_idx"),
-          col("id").as("bits")).limit(0)
-    }
+    MergeableState.read(spark, stateDir, State)
 
   /** Maintain the filter state from a streaming `documents` frame. */
   def maintain(docs: DataFrame, stateDir: String, checkpointDir: String,
                mBits: Long = 1L << 16, k: Int = 4,
-               trigger: Trigger = Trigger.ProcessingTime("20 seconds"))
-      : StreamingQuery =
-    docs.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(batch.sparkSession, stateDir, batch, batchId, mBits, k)
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
+               trigger: Trigger = MicroBatch.Interval): StreamingQuery =
+    MicroBatch.start(docs, checkpointDir, trigger) { (batch, batchId) =>
+      applyBatch(batch.sparkSession, stateDir, batch, batchId, mBits, k)
+    }
 }

@@ -26,6 +26,9 @@ import graft.operators.TextAnalysis
   */
 object StreamingCms {
 
+  /** The [[TextAnalysis.cmsState]] columns. */
+  val State = "d INT, bucket BIGINT, bsum BIGINT"
+
   /** Apply one batch's sketch to the persisted state under `stateDir`;
     * false = `batchId` already applied (replay no-op). */
   def applyBatch(spark: SparkSession, stateDir: String, batch: DataFrame,
@@ -38,26 +41,14 @@ object StreamingCms {
     * the maintained sketch; all-zero estimates when nothing has arrived. */
   def estimate(spark: SparkSession, stateDir: String, probes: DataFrame,
                depth: Int = 4, width: Int = 128): DataFrame =
-    MergeableState.current(spark, stateDir) match {
-      case Some((_, dir)) =>
-        TextAnalysis.cmsEstimate(spark.read.parquet(dir), probes,
-          depth, width)
-      case None =>
-        import org.apache.spark.sql.functions.{col, lit}
-        probes.select(col("token"), lit(0L).as("n_est")).limit(0)
-    }
+    TextAnalysis.cmsEstimate(MergeableState.read(spark, stateDir, State),
+      probes, depth, width)
 
   /** Maintain the sketch from a streaming `documents` frame. */
   def maintain(docs: DataFrame, stateDir: String, checkpointDir: String,
                depth: Int = 4, width: Int = 128,
-               trigger: Trigger = Trigger.ProcessingTime("20 seconds"))
-      : StreamingQuery =
-    docs.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(batch.sparkSession, stateDir, batch, batchId,
-          depth, width); ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
+               trigger: Trigger = MicroBatch.Interval): StreamingQuery =
+    MicroBatch.start(docs, checkpointDir, trigger) { (batch, batchId) =>
+      applyBatch(batch.sparkSession, stateDir, batch, batchId, depth, width)
+    }
 }

@@ -1,9 +1,9 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.DataStreamWriter
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.sinks.BatchCommit
 
@@ -58,9 +58,10 @@ object StreamingDedup {
     * [[graft.operators.Dedup.bandTable]] rather than re-signing the corpus
     * per batch — same production note as the batch operator. */
   def incrementalNearDedupBatched(newDocs: DataFrame, knownDocs: DataFrame,
-      jaccardThreshold: Double = 0.8)(
-      deliver: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
-    newDocs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
+      checkpointDir: String, jaccardThreshold: Double = 0.8,
+      trigger: Trigger = MicroBatch.Interval)(
+      deliver: (DataFrame, Long) => Unit): StreamingQuery =
+    MicroBatch.start(newDocs, checkpointDir, trigger) { (batch, batchId) =>
       deliver(graft.operators.Dedup.incrementalNearDedup(
         batch, knownDocs, jaccardThreshold), batchId)
     }
@@ -77,9 +78,10 @@ object StreamingDedup {
     * contract is the standard foreachBatch at-least-once: deliver
     * idempotently. */
   def spanScrubBatched(newDocs: DataFrame, knownDocs: DataFrame,
-      spanTokens: Int = 8)(
-      deliver: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
-    newDocs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
+      checkpointDir: String, spanTokens: Int = 8,
+      trigger: Trigger = MicroBatch.Interval)(
+      deliver: (DataFrame, Long) => Unit): StreamingQuery =
+    MicroBatch.start(newDocs, checkpointDir, trigger) { (batch, batchId) =>
       deliver(graft.operators.Dedup.spanScrub(batch, knownDocs, spanTokens),
         batchId)
     }
@@ -111,18 +113,16 @@ object StreamingDedup {
     * shuffled and never broadcast whole; the exact anti-join against the
     * ≤|batch|+FP survivors settles it), one batch-local dedup, one file of
     * ≤|batch| fp rows. The stream is never shuffled against the corpus
-    * text — only 32-char fingerprints ever cross stages.
-    *
-    * Returns the configured `DataStreamWriter` — caller sets checkpoint /
-    * trigger and starts it. */
+    * text — only 32-char fingerprints ever cross stages. */
   def incrementalDedupCompacted(newDocs: DataFrame, fpStorePath: String,
-      tsCol: String, delay: String)(
-      deliver: (DataFrame, Long) => Unit): DataStreamWriter[Row] = {
+      tsCol: String, delay: String, checkpointDir: String,
+      trigger: Trigger = MicroBatch.Interval)(
+      deliver: (DataFrame, Long) => Unit): StreamingQuery = {
     val deduped = newDocs
       .withColumn("fp", md5(col("text")))
       .withWatermark(tsCol, delay)
       .dropDuplicatesWithinWatermark("fp")
-    deduped.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
+    MicroBatch.start(deduped, checkpointDir, trigger) { (batch, batchId) =>
       val s = batch.sparkSession
       val store = new Path(fpStorePath)
       val fs = store.getFileSystem(s.sparkContext.hadoopConfiguration)
@@ -146,7 +146,6 @@ object StreamingDedup {
           fs.listStatus(staging).toSeq.map(_.getPath)
             .filter(_.getName.startsWith("part-")).map(_ -> committed)
         }
-        ()
       } finally novel.unpersist()
     }
   }

@@ -151,25 +151,20 @@ object StreamingFunnel {
                     minNovelTokens: Long = 20,
                     estimatedItems: Long = 1L << 16,
                     numBits: Long = 1L << 19, buckets: Int = 32,
-                    trigger: Trigger =
-                      Trigger.ProcessingTime("20 seconds"))
+                    trigger: Trigger = MicroBatch.Interval)
                    (deliver: (DataFrame, Long) => Unit): StreamingQuery =
-    docs.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val st = CorpusOps.incrementalStagesIndexed(batch.sparkSession,
-          batch, fpTable, bandsTable, setsTable, spanFpTable, fp,
-          jaccardThreshold, minhashK, rowsPerBand, spanTokens,
-          minNovelTokens, estimatedItems, numBits)
-        val survivors = st.last.localCheckpoint() // eager — see scaladoc
-        deliver(CorpusOps.globalAttrition(st.init :+ survivors,
-          CorpusOps.IncrementalStageSpecs), batchId)
-        CorpusOps.funnelStateAppend(survivors, fpTable, bandsTable,
-          setsTable, spanFpTable, fp, minhashK, rowsPerBand, spanTokens,
-          buckets)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
+    MicroBatch.start(docs, checkpointDir, trigger) { (batch, batchId) =>
+      val st = CorpusOps.incrementalStagesIndexed(batch.sparkSession,
+        batch, fpTable, bandsTable, setsTable, spanFpTable, fp,
+        jaccardThreshold, minhashK, rowsPerBand, spanTokens,
+        minNovelTokens, estimatedItems, numBits)
+      val survivors = st.last.localCheckpoint() // eager — see scaladoc
+      deliver(CorpusOps.globalAttrition(st.init :+ survivors,
+        CorpusOps.IncrementalStageSpecs), batchId)
+      CorpusOps.funnelStateAppend(survivors, fpTable, bandsTable,
+        setsTable, spanFpTable, fp, minhashK, rowsPerBand, spanTokens,
+        buckets)
+    }
 
   /** CURATION funnel served ONLINE — the live form of
     * [[CorpusOps.curationFunnelIncremental]]: a production crawl pipeline
@@ -206,18 +201,12 @@ object StreamingFunnel {
                     minNovelTokens: Long = 20,
                     estimatedItems: Long = 1L << 16,
                     numBits: Long = 1L << 19,
-                    trigger: Trigger =
-                      Trigger.ProcessingTime("20 seconds"))
+                    trigger: Trigger = MicroBatch.Interval)
                    (deliver: (DataFrame, Long) => Unit): StreamingQuery =
-    docs.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val res = CorpusOps.curationFunnelIncrementalIndexed(
-          batch.sparkSession, batch, fpTable, bandsTable, setsTable,
-          spanFpTable, fp, jaccardThreshold, minhashK, rowsPerBand,
-          spanTokens, minNovelTokens, estimatedItems, numBits)
-        deliver(res, batchId)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
+    MicroBatch.start(docs, checkpointDir, trigger) { (batch, batchId) =>
+      deliver(CorpusOps.curationFunnelIncrementalIndexed(
+        batch.sparkSession, batch, fpTable, bandsTable, setsTable,
+        spanFpTable, fp, jaccardThreshold, minhashK, rowsPerBand,
+        spanTokens, minNovelTokens, estimatedItems, numBits), batchId)
+    }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.operators.TextAnalysis
@@ -24,6 +23,9 @@ import graft.operators.TextAnalysis
   * the full ingested feed, not row equality. */
 object StreamingHeavy {
 
+  /** The [[TextAnalysis.mgCombine]] columns: counters plus the N marker. */
+  val State = "token STRING, cnt BIGINT"
+
   /** Apply one batch of raw documents to the persisted MG state under
     * `stateDir`; returns false when `batchId` was already applied
     * (replay no-op). */
@@ -34,29 +36,16 @@ object StreamingHeavy {
       (cur, inc) => TextAnalysis.mgCombine(cur.unionByName(inc), k))
 
   /** The live summary off the maintained state — [[TextAnalysis
-    * .mgFinalize]] over the stored counters (empty frame with the right
-    * schema before the first batch). */
+    * .mgFinalize]] over the stored counters. */
   def report(spark: SparkSession, stateDir: String,
              k: Int = 16): DataFrame =
-    MergeableState.current(spark, stateDir) match {
-      case Some((_, dir)) =>
-        TextAnalysis.mgFinalize(spark.read.parquet(dir), k)
-      case None =>
-        spark.range(0).select(lit("").as("token"),
-          col("id").as("est_count"), col("id").as("n_tokens"),
-          col("id").as("err_bound")).limit(0)
-    }
+    TextAnalysis.mgFinalize(MergeableState.read(spark, stateDir, State), k)
 
   /** Maintain the MG state from a streaming `documents` frame. */
   def maintain(docs: DataFrame, stateDir: String, checkpointDir: String,
                k: Int = 16,
-               trigger: Trigger = Trigger.ProcessingTime("20 seconds"))
-      : StreamingQuery =
-    docs.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(batch.sparkSession, stateDir, batch, batchId, k); ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
+               trigger: Trigger = MicroBatch.Interval): StreamingQuery =
+    MicroBatch.start(docs, checkpointDir, trigger) { (batch, batchId) =>
+      applyBatch(batch.sparkSession, stateDir, batch, batchId, k)
+    }
 }

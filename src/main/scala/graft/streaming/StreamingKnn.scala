@@ -40,21 +40,17 @@ object StreamingKnn {
   def serve(queries: DataFrame, indexTable: String, centroids: DataFrame,
             checkpointDir: String, k: Int = 3, nprobe: Int = 4,
             pq: Option[(Int, Int, Option[DataFrame])] = None,
-            trigger: Trigger = Trigger.ProcessingTime("20 seconds"))
+            trigger: Trigger = MicroBatch.Interval)
            (deliver: (DataFrame, Long) => Unit): StreamingQuery =
-    queries.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val res = pq match {
-          case Some((m, ksub, cb)) =>
-            Similarity.knnIvfPqProbe(batch.sparkSession, indexTable,
-              centroids, batch, k, nprobe, m, ksub, cb)
-          case None =>
-            Similarity.knnIvfProbe(batch.sparkSession, indexTable,
-              centroids, batch, k, nprobe)
-        }
-        deliver(res, batchId)
+    MicroBatch.start(queries, checkpointDir, trigger) { (batch, batchId) =>
+      val res = pq match {
+        case Some((m, ksub, cb)) =>
+          Similarity.knnIvfPqProbe(batch.sparkSession, indexTable,
+            centroids, batch, k, nprobe, m, ksub, cb)
+        case None =>
+          Similarity.knnIvfProbe(batch.sparkSession, indexTable,
+            centroids, batch, k, nprobe)
       }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
+      deliver(res, batchId)
+    }
 }

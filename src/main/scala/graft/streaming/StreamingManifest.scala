@@ -26,6 +26,9 @@ import graft.operators.CorpusOps
   * a mid-source batch split and replay). */
 object StreamingManifest {
 
+  /** The [[CorpusOps.manifest]] columns. */
+  val State = "source STRING, n_docs BIGINT, n_bytes BIGINT, checksum BIGINT"
+
   private val Mod = 1000000000000000000L
   private val d38 = "decimal(38,0)"
 
@@ -46,25 +49,14 @@ object StreamingManifest {
             .cast("long").as("checksum")))
 
   /** The live manifest off the maintained state — the state IS the
-    * report (empty frame with the right schema before the first batch). */
+    * report. */
   def report(spark: SparkSession, stateDir: String): DataFrame =
-    MergeableState.current(spark, stateDir) match {
-      case Some((_, dir)) => spark.read.parquet(dir)
-      case None =>
-        spark.range(0).select(
-          lit("").as("source"), col("id").as("n_docs"),
-          col("id").as("n_bytes"), col("id").as("checksum")).limit(0)
-    }
+    MergeableState.read(spark, stateDir, State)
 
   /** Maintain the manifest state from a streaming `documents` frame. */
   def maintain(docs: DataFrame, stateDir: String, checkpointDir: String,
-               trigger: Trigger = Trigger.ProcessingTime("20 seconds"))
-      : StreamingQuery =
-    docs.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(batch.sparkSession, stateDir, batch, batchId); ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
+               trigger: Trigger = MicroBatch.Interval): StreamingQuery =
+    MicroBatch.start(docs, checkpointDir, trigger) { (batch, batchId) =>
+      applyBatch(batch.sparkSession, stateDir, batch, batchId)
+    }
 }

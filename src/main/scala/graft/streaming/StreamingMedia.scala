@@ -37,47 +37,32 @@ object StreamingMedia {
   /** Append each batch's image sketches to the persisted index. */
   def ingestImages(assets: DataFrame, table: String, checkpointDir: String,
                    buckets: Int = 16,
-                   trigger: Trigger = Trigger.ProcessingTime("20 seconds"))
-      : StreamingQuery =
-    assets.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        Multimodal.phashIndexAppend(batch, table, buckets)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
+                   trigger: Trigger = MicroBatch.Interval): StreamingQuery =
+    MicroBatch.start(assets, checkpointDir, trigger) { (batch, _) =>
+      Multimodal.phashIndexAppend(batch, table, buckets)
+    }
 
   /** Append each batch's video keyframe sketches to the persisted
     * index. */
   def ingestVideos(assets: DataFrame, table: String, checkpointDir: String,
                    buckets: Int = 16,
-                   trigger: Trigger = Trigger.ProcessingTime("20 seconds"))
-      : StreamingQuery =
-    assets.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        Multimodal.videoIndexAppend(batch, table, buckets)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
+                   trigger: Trigger = MicroBatch.Interval): StreamingQuery =
+    MicroBatch.start(assets, checkpointDir, trigger) { (batch, _) =>
+      Multimodal.videoIndexAppend(batch, table, buckets)
+    }
 
   /** Serve a stream of image takedown requests (doc_id, payload)
     * against the persisted sketch index; `deliver` receives each
     * batch's (req_id, doc_id, hamming) frame and the batch id. */
   def serveImageTakedowns(requests: DataFrame, table: String,
                           checkpointDir: String, maxHamming: Int = 3,
-                          trigger: Trigger =
-                            Trigger.ProcessingTime("20 seconds"))
+                          trigger: Trigger = MicroBatch.Interval)
                          (deliver: (DataFrame, Long) => Unit)
       : StreamingQuery =
-    requests.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        deliver(Multimodal.mediaTakedownStatus(batch.sparkSession,
-          table, batch, maxHamming), batchId)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
+    MicroBatch.start(requests, checkpointDir, trigger) { (batch, batchId) =>
+      deliver(Multimodal.mediaTakedownStatus(batch.sparkSession,
+        table, batch, maxHamming), batchId)
+    }
 
   /** Serve a stream of video takedown requests (doc_id, payload)
     * against the persisted keyframe index; `deliver` receives each
@@ -86,16 +71,11 @@ object StreamingMedia {
   def serveVideoTakedowns(requests: DataFrame, table: String,
                           checkpointDir: String, maxHamming: Int = 3,
                           minVotes: Int = 2,
-                          trigger: Trigger =
-                            Trigger.ProcessingTime("20 seconds"))
+                          trigger: Trigger = MicroBatch.Interval)
                          (deliver: (DataFrame, Long) => Unit)
       : StreamingQuery =
-    requests.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        deliver(Multimodal.videoTakedownStatus(batch.sparkSession,
-          table, batch, maxHamming, minVotes), batchId)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
+    MicroBatch.start(requests, checkpointDir, trigger) { (batch, batchId) =>
+      deliver(Multimodal.videoTakedownStatus(batch.sparkSession,
+        table, batch, maxHamming, minVotes), batchId)
+    }
 }

@@ -25,6 +25,12 @@ import graft.operators.Timeseries
   * by the same all-BIGINT z-test as the batch op. */
 object StreamingRate {
 
+  /** The [[Timeseries.hourlyCounts]] columns. */
+  val State = "event_type STRING, hour_ms BIGINT, n BIGINT"
+
+  private def grid(spark: SparkSession, stateDir: String): DataFrame =
+    Timeseries.gapfillFromCounts(MergeableState.read(spark, stateDir, State))
+
   /** Apply one batch of raw events to the persisted count state under
     * `stateDir`; returns false when `batchId` was already applied
     * (replay no-op). */
@@ -38,21 +44,10 @@ object StreamingRate {
 
   /** The live anomaly report off the maintained state — the exact
     * [[Timeseries.anomalyOnGrid]]∘[[Timeseries.gapfillFromCounts]] chain
-    * the batch operator composes (empty frame with the right schema when
-    * nothing has arrived yet). */
+    * the batch operator composes. */
   def report(spark: SparkSession, stateDir: String, window: Int = 24,
              z: Int = 3, minWindow: Int = 12): DataFrame =
-    MergeableState.current(spark, stateDir) match {
-      case Some((_, dir)) =>
-        Timeseries.anomalyOnGrid(
-          Timeseries.gapfillFromCounts(spark.read.parquet(dir)),
-          window, z, minWindow)
-      case None =>
-        spark.range(0).select(
-          lit("").as("event_type"), col("id").as("hour_ms"),
-          col("id").as("n"), col("id").as("w"), col("id").as("dev2"),
-          col("id").as("bound"), col("id").as("is_anomaly")).limit(0)
-    }
+    Timeseries.anomalyOnGrid(grid(spark, stateDir), window, z, minWindow)
 
   /** Page's CUSUM drift scan off the SAME maintained state —
     * [[Timeseries.cusumOnGrid]] over the identical gap-filled grid, so
@@ -62,18 +57,7 @@ object StreamingRate {
     * contract, spec-proven alongside [[report]]'s). */
   def cusumReport(spark: SparkSession, stateDir: String,
                   slackDenom: Int = 20, threshMul: Int = 2): DataFrame =
-    MergeableState.current(spark, stateDir) match {
-      case Some((_, dir)) =>
-        Timeseries.cusumOnGrid(
-          Timeseries.gapfillFromCounts(spark.read.parquet(dir)),
-          slackDenom, threshMul)
-      case None =>
-        spark.range(0).select(
-          lit("").as("event_type"), col("id").as("hour_ms"),
-          col("id").as("n"), col("id").as("s_up_e6"),
-          col("id").as("s_dn_e6"), col("id").as("alarm_up"),
-          col("id").as("alarm_dn")).limit(0)
-    }
+    Timeseries.cusumOnGrid(grid(spark, stateDir), slackDenom, threshMul)
 
   /** The hour-of-week seasonal baseline off the SAME maintained state —
     * [[Timeseries.seasonalProfileOnGrid]] over the identical gap-filled
@@ -81,26 +65,12 @@ object StreamingRate {
     * the sequential CUSUM, AND the seasonal profile, each row-identical
     * to its batch twin over the full feed. */
   def seasonalReport(spark: SparkSession, stateDir: String): DataFrame =
-    MergeableState.current(spark, stateDir) match {
-      case Some((_, dir)) =>
-        Timeseries.seasonalProfileOnGrid(
-          Timeseries.gapfillFromCounts(spark.read.parquet(dir)))
-      case None =>
-        spark.range(0).select(
-          lit("").as("event_type"), col("id").as("week_slot"),
-          col("id").as("n_slots"), col("id").as("n_events"),
-          col("id").as("mean_e4")).limit(0)
-    }
+    Timeseries.seasonalProfileOnGrid(grid(spark, stateDir))
 
   /** Maintain the count state from a streaming `events` frame. */
   def maintain(events: DataFrame, stateDir: String, checkpointDir: String,
-               trigger: Trigger = Trigger.ProcessingTime("20 seconds"))
-      : StreamingQuery =
-    events.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(batch.sparkSession, stateDir, batch, batchId); ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
+               trigger: Trigger = MicroBatch.Interval): StreamingQuery =
+    MicroBatch.start(events, checkpointDir, trigger) { (batch, batchId) =>
+      applyBatch(batch.sparkSession, stateDir, batch, batchId)
+    }
 }

@@ -27,6 +27,9 @@ import graft.operators.CorpusOps
   */
 object StreamingSample {
 
+  /** The [[CorpusOps.weightedSample]] columns. */
+  val State = "doc_id BIGINT, source STRING, w BIGINT, skey DOUBLE"
+
   /** Apply one batch of documents to the reservoir under `stateDir`;
     * returns false when `batchId` was already applied (replay no-op). */
   def applyBatch(spark: SparkSession, stateDir: String, batch: DataFrame,
@@ -36,34 +39,16 @@ object StreamingSample {
       (cur, inc) => CorpusOps.weightedSampleMerge(Seq(cur, inc),
         kPerSource))
 
-  /** (applied batch id, state parquet path) of the current state. */
-  def current(spark: SparkSession,
-              stateDir: String): Option[(Long, String)] =
-    MergeableState.current(spark, stateDir)
-
-  /** The live sample from the maintained reservoir (empty frame with the
-    * right schema when nothing has arrived yet). */
+  /** The live sample from the maintained reservoir — the state IS the
+    * report. */
   def report(spark: SparkSession, stateDir: String): DataFrame =
-    current(spark, stateDir) match {
-      case Some((_, dir)) => spark.read.parquet(dir)
-      case None =>
-        import org.apache.spark.sql.functions.{col, lit}
-        spark.range(0).select(col("id").as("doc_id"),
-          lit("").as("source"), col("id").as("w"),
-          lit(0.0).as("skey")).limit(0)
-    }
+    MergeableState.read(spark, stateDir, State)
 
   /** Maintain the reservoir from a streaming `documents` frame. */
   def maintain(docs: DataFrame, stateDir: String, checkpointDir: String,
                kPerSource: Int = 5,
-               trigger: Trigger = Trigger.ProcessingTime("20 seconds"))
-      : StreamingQuery =
-    docs.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(batch.sparkSession, stateDir, batch, batchId,
-          kPerSource); ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
+               trigger: Trigger = MicroBatch.Interval): StreamingQuery =
+    MicroBatch.start(docs, checkpointDir, trigger) { (batch, batchId) =>
+      applyBatch(batch.sparkSession, stateDir, batch, batchId, kPerSource)
+    }
 }

@@ -83,13 +83,8 @@ object StreamingSearch {
 
   /** Maintain the delta from a streaming `documents` frame. */
   def maintain(docs: DataFrame, deltaDir: String, checkpointDir: String,
-               trigger: Trigger = Trigger.ProcessingTime("20 seconds"))
-      : StreamingQuery =
-    docs.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(batch.sparkSession, deltaDir, batch, batchId); ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
+               trigger: Trigger = MicroBatch.Interval): StreamingQuery =
+    MicroBatch.start(docs, checkpointDir, trigger) { (batch, batchId) =>
+      applyBatch(batch.sparkSession, deltaDir, batch, batchId)
+    }
 }

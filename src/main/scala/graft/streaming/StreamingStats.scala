@@ -25,6 +25,9 @@ import graft.operators.CorpusOps
   */
 object StreamingStats {
 
+  /** The [[CorpusOps.statsState]] columns. */
+  val State = "source STRING, lang STRING, n_docs BIGINT, n_tokens BIGINT"
+
   /** Apply one batch to the persisted state under `stateDir`; returns
     * false when `batchId` was already applied (replay no-op). Factored
     * from the stream so the idempotence contract is directly testable;
@@ -35,34 +38,14 @@ object StreamingStats {
       CorpusOps.statsState(batch),
       (cur, inc) => CorpusOps.statsMerge(Seq(cur, inc)))
 
-  /** (applied batch id, state parquet path) of the current state, if any. */
-  def current(spark: SparkSession,
-              stateDir: String): Option[(Long, String)] =
-    MergeableState.current(spark, stateDir)
-
-  /** The live [[CorpusOps.corpusStats]] report from the maintained state
-    * (empty frame with the right schema when nothing has arrived yet). */
+  /** The live [[CorpusOps.corpusStats]] report from the maintained state. */
   def report(spark: SparkSession, stateDir: String): DataFrame =
-    current(spark, stateDir) match {
-      case Some((_, dir)) =>
-        CorpusOps.statsFinalize(spark.read.parquet(dir))
-      case None =>
-        import org.apache.spark.sql.functions.{col, lit}
-        spark.range(0).select(
-          lit("").as("source"), lit("").as("lang"),
-          col("id").as("n_docs"), col("id").as("n_tokens"),
-          lit(0.0).as("token_share")).limit(0)
-    }
+    CorpusOps.statsFinalize(MergeableState.read(spark, stateDir, State))
 
   /** Maintain the state from a streaming `documents` frame. */
   def maintain(docs: DataFrame, stateDir: String, checkpointDir: String,
-               trigger: Trigger = Trigger.ProcessingTime("20 seconds"))
-      : StreamingQuery =
-    docs.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(batch.sparkSession, stateDir, batch, batchId); ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
+               trigger: Trigger = MicroBatch.Interval): StreamingQuery =
+    MicroBatch.start(docs, checkpointDir, trigger) { (batch, batchId) =>
+      applyBatch(batch.sparkSession, stateDir, batch, batchId)
+    }
 }

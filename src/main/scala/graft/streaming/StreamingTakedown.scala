@@ -38,17 +38,12 @@ object StreamingTakedown {
   def serve(requests: DataFrame, docs: DataFrame, bandsTable: String,
             setsTable: String, checkpointDir: String,
             jaccardThreshold: Double = 0.8,
-            trigger: Trigger = Trigger.ProcessingTime("20 seconds"))
+            trigger: Trigger = MicroBatch.Interval)
            (deliver: (DataFrame, Long) => Unit): StreamingQuery =
-    requests.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val res = Dedup.takedownStatusIndexed(batch.sparkSession, docs,
-          batch, bandsTable, setsTable, jaccardThreshold)
-        deliver(res, batchId)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
+    MicroBatch.start(requests, checkpointDir, trigger) { (batch, batchId) =>
+      deliver(Dedup.takedownStatusIndexed(batch.sparkSession, docs,
+        batch, bandsTable, setsTable, jaccardThreshold), batchId)
+    }
 
   /** UNIFIED takedown served online — ONE request stream against
     * EVERYTHING: each micro-batch of doc_ids is fanned across the text
@@ -66,18 +61,13 @@ object StreamingTakedown {
                    videoTable: String, checkpointDir: String,
                    jaccardThreshold: Double = 0.8, maxHamming: Int = 3,
                    minVotes: Int = 2,
-                   trigger: Trigger = Trigger.ProcessingTime("20 seconds"))
+                   trigger: Trigger = MicroBatch.Interval)
                   (deliver: (DataFrame, Long) => Unit): StreamingQuery =
-    requests.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val res = Multimodal.takedownUnified(batch.sparkSession, docs,
-          batch, bandsTable, setsTable, imageTable, audioTable,
-          videoTable, jaccardThreshold, maxHamming, minVotes)
-        deliver(res, batchId)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
+    MicroBatch.start(requests, checkpointDir, trigger) { (batch, batchId) =>
+      deliver(Multimodal.takedownUnified(batch.sparkSession, docs,
+        batch, bandsTable, setsTable, imageTable, audioTable,
+        videoTable, jaccardThreshold, maxHamming, minVotes), batchId)
+    }
 
   /** CONTENT-ADDRESSED unified takedown served online — the intake a
     * compliance desk actually runs: tickets stream in as
@@ -100,31 +90,25 @@ object StreamingTakedown {
                           videoTable: String, checkpointDir: String,
                           jaccardThreshold: Double = 0.8,
                           maxHamming: Int = 3, minVotes: Int = 2,
-                          trigger: Trigger =
-                            Trigger.ProcessingTime("20 seconds"))
+                          trigger: Trigger = MicroBatch.Interval)
                          (deliver: (DataFrame, Long) => Unit)
       : StreamingQuery =
-    requests.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val b = batch.localCheckpoint() // tickets evaluated once, read 4x
-        // A text-only ticket ships a NULL payload; the media sketchers
-        // (phashOne / audioFingerprintRaw / decodeOne) dereference
-        // bytes.length and would NPE — and a foreachBatch failure replays
-        // the micro-batch from the checkpoint forever, so one attachment-
-        // less ticket would poison-pill the whole compliance stream.
-        // Filter nulls here: such tickets flow through the text leg only.
-        val payload = b
-          .filter(org.apache.spark.sql.functions.col("payload").isNotNull)
-          .select(
-            org.apache.spark.sql.functions.col("req_id").as("doc_id"),
-            org.apache.spark.sql.functions.col("payload"))
-        val res = Multimodal.takedownUnifiedContent(batch.sparkSession,
-          docs, b.select("req_id", "text"), payload, payload, payload,
-          bandsTable, setsTable, imageTable, audioTable, videoTable,
-          jaccardThreshold, maxHamming, minVotes)
-        deliver(res, batchId)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
+    MicroBatch.start(requests, checkpointDir, trigger) { (batch, batchId) =>
+      val b = batch.localCheckpoint() // tickets evaluated once, read 4x
+      // A text-only ticket ships a NULL payload; the media sketchers
+      // (phashOne / audioFingerprintRaw / decodeOne) dereference
+      // bytes.length and would NPE — and a foreachBatch failure replays
+      // the micro-batch from the checkpoint forever, so one attachment-
+      // less ticket would poison-pill the whole compliance stream.
+      // Filter nulls here: such tickets flow through the text leg only.
+      val payload = b
+        .filter(org.apache.spark.sql.functions.col("payload").isNotNull)
+        .select(
+          org.apache.spark.sql.functions.col("req_id").as("doc_id"),
+          org.apache.spark.sql.functions.col("payload"))
+      deliver(Multimodal.takedownUnifiedContent(batch.sparkSession,
+        docs, b.select("req_id", "text"), payload, payload, payload,
+        bandsTable, setsTable, imageTable, audioTable, videoTable,
+        jaccardThreshold, maxHamming, minVotes), batchId)
+    }
 }

@@ -9,7 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Keeps the publish-once commit single: `BatchCommit` is the one code
   * path that makes a sink's or a streaming maintainer's output visible, so
   * no writer can drift back to its own tmp+rename, marker file or append
-  * that a replayed batch would duplicate. */
+  * that a replayed batch would duplicate. Keeps the writer start single
+  * too: `MicroBatch` is the one `foreachBatch` call and the one batch
+  * interval. */
 class CommitPolicySpec extends AnyFunSuite {
 
   test("no writer under graft/sinks or graft/streaming renames, appends " +
@@ -29,5 +31,23 @@ class CommitPolicySpec extends AnyFunSuite {
       .filter(p => hand.findFirstIn(Files.readString(p)).isDefined)
     assert(offenders.isEmpty, "publish through BatchCommit: " +
       offenders.mkString(", "))
+  }
+
+  test("no writer under graft/sinks or graft/streaming calls .foreachBatch " +
+    "or writes a ProcessingTime( trigger outside MicroBatch") {
+    val comment = """(?s)/\*.*?\*/|//[^\n]*""".r
+    val own = """\.foreachBatch\b|\bProcessingTime\s*\(""".r
+    val files = Seq("sinks", "streaming").flatMap { d =>
+      val walk = Files.walk(Paths.get(s"src/main/scala/graft/$d"))
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally walk.close()
+    }
+    assert(files.exists(_.getFileName.toString == "MicroBatch.scala"))
+    val offenders = files
+      .filter(_.getFileName.toString != "MicroBatch.scala")
+      .filter(p => own.findFirstIn(
+        comment.replaceAllIn(Files.readString(p), "")).isDefined)
+    assert(offenders.isEmpty, "start through MicroBatch.start on " +
+      "MicroBatch.Interval: " + offenders.mkString(", "))
   }
 }

@@ -258,10 +258,10 @@ class ReplaySpec extends SparkTestBase {
       Run(s"$dir/cp", () => StreamingDedup.incrementalDedupCompacted(
             input.toDF().toDF("ts_ms", "text")
               .withColumn("ts", timestamp_millis(col("ts_ms"))),
-            s"$dir/store", "ts", "10 seconds") { (novel, id) =>
-            delivery.writeBatch(novel.select(col("text").as("value")), id)
-          }
-          .option("checkpointLocation", s"$dir/cp").trigger(now).start(),
+            s"$dir/store", "ts", "10 seconds", s"$dir/cp", now) {
+            (novel, id) =>
+              delivery.writeBatch(novel.select(col("text").as("value")), id)
+          },
         i => { input.addData(batches(i)); () },
         () => textUnder(s"$dir/target") ++
           rows(spark.read.parquet(s"$dir/store")).map("store:" + _))

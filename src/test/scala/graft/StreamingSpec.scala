@@ -435,14 +435,13 @@ class StreamingSpec extends SparkTestBase {
     val docs = input.toDF().toDF("doc_id", "text", "lang", "source")
     val got = scala.collection.mutable.Map[Long, (String, Long, Long)]()
     val q = graft.streaming.StreamingDedup
-      .spanScrubBatched(docs, known) { (scrubbed, _) =>
+      .spanScrubBatched(docs, known, tmpDir("sspanscrub_cp"),
+        trigger = Trigger.ProcessingTime(0)) { (scrubbed, _) =>
         got.synchronized {
           scrubbed.collect().foreach(r => got(r.getLong(0)) =
             ((r.getString(1), r.getLong(2), r.getLong(3))))
         }
       }
-      .option("checkpointLocation", tmpDir("sspanscrub_cp"))
-      .trigger(Trigger.ProcessingTime(0)).start()
     val b1 = Seq((10L, s"n1 $span n2", "en", "srcA"),
       (11L, "entirely novel words beyond any known overlap at all",
         "en", "srcA"))
@@ -476,13 +475,12 @@ class StreamingSpec extends SparkTestBase {
     val docs = input.toDF().toDF("doc_id", "text", "lang", "source")
     val delivered = scala.collection.mutable.ArrayBuffer[Long]()
     val q = graft.streaming.StreamingDedup
-      .incrementalNearDedupBatched(docs, known) { (novel, _) =>
+      .incrementalNearDedupBatched(docs, known, tmpDir("sneardedup_cp"),
+        trigger = Trigger.ProcessingTime(0)) { (novel, _) =>
         delivered.synchronized {
           delivered ++= novel.collect().map(_.getLong(0))
         }
       }
-      .option("checkpointLocation", tmpDir("sneardedup_cp"))
-      .trigger(Trigger.ProcessingTime(0)).start()
     input.addData((10L, base, "en", "srcA"), // exact dup of corpus doc
       (11L, base + " slightly", "en", "srcA"), // near-dup (J ≈ 0.89)
       (12L, "totally novel content words nothing shared here at all",
@@ -537,13 +535,12 @@ class StreamingSpec extends SparkTestBase {
     val docs = input.toDF().toDF("ts_ms", "text")
       .withColumn("ts", timestamp_millis(col("ts_ms")))
     val q = graft.streaming.StreamingDedup
-      .incrementalDedupCompacted(docs, store, "ts", "10 seconds") {
+      .incrementalDedupCompacted(docs, store, "ts", "10 seconds",
+        tmpDir("sdedup_cpt_cp"), Trigger.ProcessingTime(0)) {
         (novel, _) => delivered.synchronized {
           delivered ++= novel.collect().map(_.getAs[String]("text"))
         }
       }
-      .option("checkpointLocation", tmpDir("sdedup_cpt_cp"))
-      .trigger(Trigger.ProcessingTime(0)).start()
     // batch 1: novel doc at t=1s + a known-corpus doc (store-probed away)
     input.addData((1000L, "fresh a"), (1500L, "old doc one"))
     q.processAllAvailable()
