@@ -487,13 +487,11 @@ object Example {
       // an at-least-once replay: the same increment admitted twice
       (1 to 2).foreach { _ =>
         CorpusOps.funnelStateAppend(inc, "graft_example_ffp",
-          "graft_example_fb", "graft_example_fs", "graft_example_fsp",
-          buckets = 4)
+          "graft_example_fb", "graft_example_fs", "graft_example_fsp")
       }
       val bloated = spark.table("graft_example_ffp").count()
       CorpusOps.funnelStateCompact(spark, "graft_example_ffp",
-        "graft_example_fb", "graft_example_fs", "graft_example_fsp",
-        buckets = 4)
+        "graft_example_fb", "graft_example_fs", "graft_example_fsp")
       println(s"[example] funnel-state compaction: fp universe $bloated" +
         s" rows bloated by the replay -> " +
         s"${spark.table("graft_example_ffp").count()} after compact")
@@ -504,16 +502,14 @@ object Example {
         "graft_example_ffp", "graft_example_fb", "graft_example_fs",
         "graft_example_fsp")
       CorpusOps.funnelStateCompact(spark, "graft_example_ffp",
-        "graft_example_fb", "graft_example_fs", "graft_example_fsp",
-        buckets = 4)
+        "graft_example_fb", "graft_example_fs", "graft_example_fsp")
       println(s"[example] funnel-state RTBF: the replayed increment's " +
         s"ids tombstoned -> fp universe " +
         s"${spark.table("graft_example_ffp").count()} rows after the " +
         "purge compact (back to the pre-admit corpus)")
       val beforeForget = spark.table("graft_example_phidx").count()
       Multimodal.mediaIndexForget(spark, "graft_example_phidx",
-        docs.filter(col("doc_id") % 10 === 8).select("doc_id"),
-        buckets = 4)
+        docs.filter(col("doc_id") % 10 === 8).select("doc_id"))
       println(s"[example] index forget (RTBF lifecycle): phash index " +
         s"$beforeForget assets -> " +
         s"${spark.table("graft_example_phidx").count()} after the " +

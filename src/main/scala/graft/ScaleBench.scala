@@ -329,8 +329,7 @@ object ScaleBench {
         val batch = spark.read.parquet(s"$baseDir/documents.parquet")
           .withColumn("doc_id", col("doc_id") + lit(IdStride * 1000))
         val trials = (1 to MaintTrials).map { _ =>
-          spark.sql(s"DROP TABLE IF EXISTS $bandsT")
-          spark.sql(s"DROP TABLE IF EXISTS $setsT")
+          operators.Bucketing.drop(spark, bandsT, setsT)
           val t0 = System.nanoTime()
           operators.Dedup.nearDupWriteIndex(docs, bandsT, setsT)
           val tBuild = (System.nanoTime() - t0) / 1e9
@@ -346,8 +345,7 @@ object ScaleBench {
               Option(e.getMessage).getOrElse("").take(300)))
           (-1.0, -1.0)
       } finally {
-        spark.sql(s"DROP TABLE IF EXISTS $bandsT")
-        spark.sql(s"DROP TABLE IF EXISTS $setsT")
+        operators.Bucketing.drop(spark, bandsT, setsT)
       }
     }
     val maint: Seq[(Int, (Double, Double))] =
@@ -366,7 +364,7 @@ object ScaleBench {
         val batch = spark.read.parquet(s"$baseDir/embeddings.parquet")
           .withColumn("vec_id", col("vec_id") + lit(IdStride * 1000))
         val trials = (1 to MaintTrials).map { _ =>
-          spark.sql(s"DROP TABLE IF EXISTS $table")
+          operators.Bucketing.drop(spark, table)
           val t0 = System.nanoTime()
           operators.Similarity.ivfWriteIndex(emb, cents, table)
           val tBuild = (System.nanoTime() - t0) / 1e9
@@ -382,7 +380,7 @@ object ScaleBench {
               Option(e.getMessage).getOrElse("").take(300)))
           (-1.0, -1.0)
       } finally {
-        spark.sql(s"DROP TABLE IF EXISTS $table")
+        operators.Bucketing.drop(spark, table)
       }
     }
     val ivfMaint: Seq[(Int, (Double, Double))] =
@@ -430,8 +428,7 @@ object ScaleBench {
         val batch = spark.read.parquet(s"$baseDir/documents.parquet")
           .withColumn("doc_id", col("doc_id") + lit(IdStride * 1000))
         val trials = (1 to MaintTrials).map { i =>
-          spark.sql(s"DROP TABLE IF EXISTS $pT")
-          spark.sql(s"DROP TABLE IF EXISTS $sT")
+          operators.Bucketing.drop(spark, pT, sT)
           // fresh per-trial dir: a reused delta dir makes applyBatch a
           // replay no-op (batchId already committed) and the cell would
           // price the refusal, not the commit
@@ -461,8 +458,7 @@ object ScaleBench {
               Option(e.getMessage).getOrElse("").take(300)))
           (-1.0, -1.0)
       } finally {
-        spark.sql(s"DROP TABLE IF EXISTS $pT")
-        spark.sql(s"DROP TABLE IF EXISTS $sT")
+        operators.Bucketing.drop(spark, pT, sT)
       }
     }
     val searchMaint: Seq[(Int, (Double, Double))] =
@@ -545,8 +541,7 @@ object ScaleBench {
         // probes continuously, not once-after-rebuild.
         def probeSteady(): Double = { probeOnce(); probeOnce() }
         val trials = (1 to MaintTrials).map { _ =>
-          (ts :+ (ts(0) + "_dead"))
-            .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+          operators.Bucketing.drop(spark, ts :+ (ts(0) + "_dead"): _*)
           val t0 = System.nanoTime()
           operators.CorpusOps.funnelWriteState(docs, ts(0), ts(1), ts(2),
             ts(3))
@@ -595,8 +590,7 @@ object ScaleBench {
               Option(e.getMessage).getOrElse("").take(300)))
           (-1.0, -1.0, -1.0, -1.0, -1.0, -1.0, -1.0, -1.0, -1L, -1L)
       } finally {
-        (ts :+ (ts(0) + "_dead"))
-          .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+        operators.Bucketing.drop(spark, ts :+ (ts(0) + "_dead"): _*)
       }
     }
     val funnelMaint: Seq[(Int, (Double, Double, Double, Double, Double,

@@ -2433,13 +2433,6 @@ object SparkEntry {
     }),
   )
 
-  /** Build-or-reuse the persisted cell-bucketed IVF index for `dir`'s
-    * embeddings table; returns (table name, centroid frame). The table name
-    * embeds a fingerprint of the input files (path, length, mtime), so a
-    * rebuilt/changed dataset under the same dir gets a fresh index instead
-    * of silently serving a stale one (the metastore persists across JVMs in
-    * this cwd), and two distinct dirs can never collide on a name. Warm
-    * runs skip straight to the probe path. */
   /** Persisted near-dup index (bands + shingle sets) for the documents
     * table under `dir`, keyed by a dataset fingerprint exactly like
     * [[ivfIndexedTable]]: a changed corpus forces a rebuild, stale
@@ -2486,7 +2479,7 @@ object SparkEntry {
       Multimodal.phashWriteIndex(Multimodal.synthBmpPayload(d), ns(0),
         buckets = 8)
       Multimodal.mediaIndexForget(s, ns(0),
-        d.filter(col("doc_id") % 10 === 8).select("doc_id"), buckets = 8)
+        d.filter(col("doc_id") % 10 === 8).select("doc_id"))
     }.head
   }
 
@@ -2501,7 +2494,7 @@ object SparkEntry {
         ns(0), buckets = 8)
       Multimodal.phashIndexAppend(
         Multimodal.synthBmpPayload(d.filter(col("doc_id") % 10 === 0)),
-        ns(0), buckets = 8)
+        ns(0))
     }.head
   }
 
@@ -2536,7 +2529,7 @@ object SparkEntry {
     versionedTables(s, dir, d, Seq("graft_winnowf_sel")) { ns =>
       TextAnalysis.winnowWriteIndex(d, ns(0), buckets = 8)
       TextAnalysis.winnowIndexForget(s, ns(0),
-        d.filter(col("doc_id") % 10 === 0).select("doc_id"), buckets = 8)
+        d.filter(col("doc_id") % 10 === 0).select("doc_id"))
     }.head
   }
 
@@ -2549,7 +2542,7 @@ object SparkEntry {
       TextAnalysis.winnowWriteIndex(d.filter(col("doc_id") % 10 =!= 0),
         ns(0), buckets = 8)
       TextAnalysis.winnowIndexAppend(d.filter(col("doc_id") % 10 === 0),
-        ns(0), buckets = 8)
+        ns(0))
     }.head
   }
 
@@ -2574,29 +2567,22 @@ object SparkEntry {
       TextAnalysis.searchWriteIndex(d.filter(col("doc_id") % 10 =!= 0),
         ns(0), ns(1), buckets = 8)
       TextAnalysis.searchIndexAppend(s,
-        d.filter(col("doc_id") % 10 === 0), ns(0), ns(1), buckets = 8)
+        d.filter(col("doc_id") % 10 === 0), ns(0), ns(1))
     }
     (names(0), names(1))
   }
 
   /** Index built over the FULL corpus, then RTBF-forgotten down to the
     * %10!=0 slice ([[TextAnalysis.searchIndexForget]]) — the
-    * doc_search_bm25_forgotten gate's fixture. Staged under `__bld`
-    * names and renamed only after the forget completes (the
-    * ivfAppendedTable discipline): the final names must never exist
-    * half-forgotten, or the exists-guard would serve ghosts forever. */
+    * doc_search_bm25_forgotten gate's fixture. */
   private def searchForgottenTables(s: SparkSession,
                                     dir: String): (String, String) = {
     val d = t(s, dir, "documents")
     val names = versionedTables(s, dir, d,
       Seq("graft_searchf_post", "graft_searchf_stats")) { ns =>
-      val bld = ns.map(_ + "__bld")
-      bld.foreach(n => s.sql(s"DROP TABLE IF EXISTS $n"))
-      TextAnalysis.searchWriteIndex(d, bld(0), bld(1), buckets = 8)
-      TextAnalysis.searchIndexForget(s, bld(0), bld(1),
-        d.filter(col("doc_id") % 10 === 0).select("doc_id"), buckets = 8)
-      s.sql(s"ALTER TABLE ${bld(0)} RENAME TO ${ns(0)}")
-      s.sql(s"ALTER TABLE ${bld(1)} RENAME TO ${ns(1)}")
+      TextAnalysis.searchWriteIndex(d, ns(0), ns(1), buckets = 8)
+      TextAnalysis.searchIndexForget(s, ns(0), ns(1),
+        d.filter(col("doc_id") % 10 === 0).select("doc_id"))
     }
     (names(0), names(1))
   }
@@ -2624,19 +2610,10 @@ object SparkEntry {
     val e = t(s, dir, "embeddings")
     val cents = Similarity.ivfSeedCentroids(e, 16)
     val names = versionedTables(s, dir, e, Seq("graft_ivf_app")) { ns =>
-      // Build under a staging name and RENAME once complete: the final
-      // name must never exist half-appended (a kill between the build and
-      // the append would otherwise register an evens-only index that the
-      // exists-guard then serves forever). The `__bld` name shares the
-      // prefix, so an abandoned staging table is swept as stale by the
-      // next versionedTables rebuild.
-      val bld = ns(0) + "__bld"
-      s.sql(s"DROP TABLE IF EXISTS $bld")
       Similarity.ivfWriteIndex(e.filter(col("vec_id") % 2 === 0), cents,
-        bld, buckets = 8)
+        ns(0), buckets = 8)
       Similarity.ivfIndexAppend(e.filter(col("vec_id") % 2 =!= 0), cents,
-        bld, buckets = 8)
-      s.sql(s"ALTER TABLE $bld RENAME TO ${ns(0)}")
+        ns(0))
     }
     (names(0), cents)
   }
@@ -2645,11 +2622,18 @@ object SparkEntry {
     * index: names are `<prefix>_<dirTag>_<fp>` where the fingerprint
     * hashes the source frame's input files (path, length, mtime) — a
     * changed dataset changes the names, forcing a rebuild instead of
-    * silently serving a stale index, and two dirs never collide. Stale
-    * same-prefix siblings (same dir, older fingerprint) are dead weight in
-    * the warehouse and are dropped before `build` runs; `build` runs once,
-    * only if any of the named tables is missing. Returns the table names
-    * in `prefixes` order. */
+    * serving a stale index from a reused warehouse dir, and two dirs never
+    * collide. Stale same-prefix siblings (same dir, older fingerprint) are
+    * dead weight in the warehouse and are dropped before `build` runs;
+    * `build` runs once per session, only if any of the named tables is
+    * missing. It builds under staged `__bld` names, each renamed to its
+    * final name only after `build` returns: a build step that throws
+    * leaves no half-built index under a final name for the exists-guard
+    * to serve. Returns the table names in `prefixes` order.
+    *
+    * The catalogue is in memory (no Hive support), so registrations die
+    * with the JVM; only warehouse dirs outlive it, and the orphan-dir
+    * sweep below is what recovers a killed build. */
   private def versionedTables(s: SparkSession, dir: String, src: DataFrame,
                               prefixes: Seq[String])
                              (build: Seq[String] => Unit): Seq[String] = {
@@ -2670,9 +2654,9 @@ object SparkEntry {
       // of the named tables, or a staging table that never renamed — so
       // drop every registration for the prefix, current names included,
       // and rebuild from nothing.
-      s.catalog.listTables().collect().map(_.name)
+      Bucketing.drop(s, s.catalog.listTables().collect().map(_.name)
         .filter(n => prefixes.exists(p => n.startsWith(s"${p}_${dirTag}_")))
-        .foreach(n => s.sql(s"DROP TABLE IF EXISTS $n"))
+        .toSeq: _*)
       // ...then sweep orphan warehouse DIRS for the prefix: a CTAS killed
       // before catalog registration leaves a non-empty unregistered
       // location, and the rebuild's CTAS would refuse it
@@ -2686,7 +2670,9 @@ object SparkEntry {
         if (prefixes.exists(p => n.startsWith(s"${p}_${dirTag}_")))
           fs.delete(st.getPath, true)
       }
-      build(names)
+      val staged = names.map(_ + "__bld")
+      build(staged)
+      staged.zip(names).foreach { case (b, n) => Bucketing.rename(s, b, n) }
     }
     names
   }

@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.CatalogTable
 
 /** Bucketed-table helpers: pre-shuffle fact tables ONCE on their join key so
   * every subsequent join/aggregation on that key runs shuffle-free — the
@@ -10,104 +11,127 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Spark's bucketing lives in the catalog (`bucketBy` requires
   * `saveAsTable`); readers of both sides get `HashPartitioning(key, n)`
   * output partitioning, and Catalyst elides the Exchange on joins whose keys
-  * match the bucket spec. */
+  * match the bucket spec.
+  *
+  * The one way a persisted index table changes: a build
+  * ([[writeBucketed]], [[writePlain]]) decides the layout once; after that
+  * [[append]] and [[rewrite]] read the bucket columns, bucket count, sort
+  * columns and `graft.*` properties from the catalogue, and every rewrite
+  * stages a sibling table and swaps it in by rename. */
 object Bucketing {
 
-  /** Persist `df` as a bucketed managed table (overwriting any previous
-    * one). `buckets` should match the downstream parallelism target. */
+  /** Build `table`: persist `df` as a bucketed managed table, replacing any
+    * previous one. `buckets` should match the downstream parallelism
+    * target. The layout chosen here is the table's for life. */
   def writeBucketed(df: DataFrame, table: String, key: String,
                     buckets: Int = 32,
                     sortBy: Option[String] = None): Unit = {
-    val spark = df.sparkSession
-    // An in-place REWRITE (forget/compact) must not lose the build-param
-    // sidecar ([[setTableParams]]) across the drop+recreate — carry any
-    // existing graft.* properties over to the new incarnation.
-    val carried: Map[String, String] =
-      if (!spark.catalog.tableExists(table)) Map.empty
-      else try {
-        spark.sql(s"SHOW TBLPROPERTIES $table").collect()
-          .filter(_.getString(0).startsWith("graft."))
-          .map(r => r.getString(0).stripPrefix("graft.") -> r.getString(1))
-          .toMap
-      } catch { case _: Throwable => Map.empty }
-    // drop any previous table AND its location: a stale warehouse dir from
-    // a dead session makes CREATE TABLE fail with LOCATION_ALREADY_EXISTS
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    val loc = new org.apache.hadoop.fs.Path(
-      spark.conf.get("spark.sql.warehouse.dir"), table.toLowerCase)
-    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(loc)) fs.delete(loc, true)
-    val w = df.write.mode("overwrite").format("parquet")
-      .bucketBy(buckets, key)
+    drop(df.sparkSession, table)
+    val w = df.write.format("parquet").bucketBy(buckets, key)
     sortBy.fold(w)(c => w.sortBy(c)).saveAsTable(table)
-    if (carried.nonEmpty) setTableParams(spark, table, carried)
   }
 
-  /** Write a small UNBUCKETED side table with the same
-    * drop-stale-location discipline as [[writeBucketed]] — for index
-    * metadata (one-row stats frames) that rides next to a bucketed
-    * index. */
+  /** Build a small UNBUCKETED side table, replacing any previous one — for
+    * index metadata (one-row stats frames, the funnel's tombstone ledger)
+    * that rides next to a bucketed index. */
   def writePlain(df: DataFrame, table: String): Unit = {
-    val spark = df.sparkSession
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    val loc = new org.apache.hadoop.fs.Path(
-      spark.conf.get("spark.sql.warehouse.dir"), table.toLowerCase)
-    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(loc)) fs.delete(loc, true)
-    df.write.mode("overwrite").format("parquet").saveAsTable(table)
+    drop(df.sparkSession, table)
+    df.write.format("parquet").saveAsTable(table)
   }
 
-  /** Append `df` to an EXISTING plain table created by [[writePlain]] —
-    * the ledger-maintenance path (e.g. the funnel's RTBF tombstone
-    * ledger): O(batch) appends to a small side table. Same
-    * existence-require discipline as [[appendBucketed]]: appending to a
-    * mistyped name must fail loudly, not register a fragment. */
-  def appendPlain(df: DataFrame, table: String): Unit = {
-    require(df.sparkSession.catalog.tableExists(table),
-      s"appendPlain: table '$table' does not exist — build it with " +
-        "writePlain first")
-    df.write.mode("append").format("parquet").saveAsTable(table)
-  }
-
-  /** Append `df` to an EXISTING bucketed table created by [[writeBucketed]],
-    * preserving the bucket layout: each appended file set is hashed into the
-    * same `buckets` buckets on `key`, so readers keep
-    * `HashPartitioning(key, n)` and co-located joins stay exchange-free
-    * after the append. Spark validates the (key, buckets) spec against the
-    * catalog and fails loudly on a mismatch rather than silently degrading
-    * the layout. This is the index-MAINTENANCE path: grow a persisted index
-    * by the increment's size instead of rewriting the corpus-sized table
-    * (at 100 TB a rebuild re-pays the full corpus scan; an append pays one
-    * pass over the batch). */
-  def appendBucketed(df: DataFrame, table: String, key: String,
-                     buckets: Int = 32,
-                     sortBy: Option[String] = None): Unit = {
+  /** Append `df` to an EXISTING table built by [[writeBucketed]] or
+    * [[writePlain]] — the index-MAINTENANCE path: grow a persisted index
+    * by the increment's size instead of rewriting the corpus-sized table.
+    * The bucket spec (key, count, sort columns) comes from the catalogue
+    * — Spark refuses an append that names none — so readers keep
+    * `HashPartitioning(key, n)` and co-located joins stay exchange-free. */
+  def append(df: DataFrame, table: String): Unit = {
     // mode("append").saveAsTable would silently CREATE a missing table, and
     // an append-before-build against a mistyped name then registers an
     // increment-only "index" that later probes would serve as if it were
     // the full corpus. Appending requires the table to already exist.
     require(df.sparkSession.catalog.tableExists(table),
-      s"appendBucketed: table '$table' does not exist — build it with " +
-        "writeBucketed first (append-before-build would register an " +
-        "increment-only index)")
-    val w = df.write.mode("append").format("parquet")
-      .bucketBy(buckets, key)
-    sortBy.fold(w)(c => w.sortBy(c)).saveAsTable(table)
+      s"append: table '$table' does not exist — build it with " +
+        "writeBucketed or writePlain first (append-before-build would " +
+        "register an increment-only index)")
+    laidOut(df, metadata(df.sparkSession, table)).mode("append")
+      .saveAsTable(table)
   }
 
-  /** The bucket count of an existing catalog table, if it is bucketed.
-    * The in-place index rewrites (forget/compact) resolve their bucket
-    * count from HERE rather than trusting a caller-supplied parameter: a
-    * mismatched parameter would silently recreate the table with a
-    * different bucket count, breaking the exchange-free co-location every
-    * probe relies on, with no error anywhere (r16 advisor finding). */
-  def tableBuckets(spark: SparkSession, table: String): Option[Int] =
+  /** Replace the rows of an EXISTING table with `f(current)` — the one
+    * rewrite (forget, compact, re-derived stats). The new rows are written
+    * under a sibling name with the catalogue's bucket spec and `graft.*`
+    * properties while the live table is still whole, then the live table
+    * is dropped and the sibling renamed into its place. Nothing is pinned:
+    * `f` may read the live table lazily. A failure before the swap removes
+    * the sibling and leaves the live table as it was. */
+  def rewrite(spark: SparkSession, table: String)
+             (f: DataFrame => DataFrame): Unit = {
+    spark.catalog.refreshTable(table)
+    val meta = metadata(spark, table)
+    val sib = table + "__swap"
+    drop(spark, sib)
     try {
-      spark.sessionState.catalog
-        .getTableMetadata(
-          spark.sessionState.sqlParser.parseTableIdentifier(table))
-        .bucketSpec.map(_.numBuckets)
-    } catch { case _: Throwable => None }
+      laidOut(f(spark.table(table)), meta).saveAsTable(sib)
+      val params = meta.properties.collect {
+        case (k, v) if k.startsWith("graft.") => k.stripPrefix("graft.") -> v
+      }
+      if (params.nonEmpty) setTableParams(spark, sib, params)
+    } catch {
+      case e: Throwable =>
+        drop(spark, sib)
+        throw e
+    }
+    drop(spark, table)
+    rename(spark, sib, table)
+  }
+
+  /** A parquet writer for `df` with `meta`'s bucket spec, if any. */
+  private def laidOut(df: DataFrame,
+                      meta: CatalogTable): DataFrameWriter[Row] = {
+    val w = df.write.format("parquet")
+    meta.bucketSpec.fold(w) { b =>
+      val wb = w.bucketBy(b.numBuckets, b.bucketColumnNames.head,
+        b.bucketColumnNames.tail: _*)
+      if (b.sortColumnNames.isEmpty) wb
+      else wb.sortBy(b.sortColumnNames.head, b.sortColumnNames.tail: _*)
+    }
+  }
+
+  /** Publish a staged table under its live name: clear a stale live
+    * location first (a warehouse dir left by a dead session makes the
+    * rename fail), rename, refresh. */
+  private[graft] def rename(spark: SparkSession, from: String,
+                            to: String): Unit = {
+    deleteLocation(spark, to)
+    spark.sql(s"ALTER TABLE $from RENAME TO $to")
+    spark.catalog.refreshTable(to)
+  }
+
+  /** Drop tables AND their warehouse locations: a stale dir from a dead
+    * session makes a later CREATE TABLE fail with
+    * LOCATION_ALREADY_EXISTS. */
+  def drop(spark: SparkSession, tables: String*): Unit =
+    tables.foreach { t =>
+      spark.sql(s"DROP TABLE IF EXISTS $t")
+      deleteLocation(spark, t)
+    }
+
+  private def deleteLocation(spark: SparkSession, table: String): Unit = {
+    val loc = new org.apache.hadoop.fs.Path(
+      spark.conf.get("spark.sql.warehouse.dir"), table.toLowerCase)
+    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(loc)) fs.delete(loc, true)
+  }
+
+  private def metadata(spark: SparkSession, table: String): CatalogTable =
+    spark.sessionState.catalog.getTableMetadata(
+      spark.sessionState.sqlParser.parseTableIdentifier(table))
+
+  /** The bucket count of an existing catalog table, if it is bucketed. */
+  def tableBuckets(spark: SparkSession, table: String): Option[Int] =
+    try metadata(spark, table).bucketSpec.map(_.numBuckets)
+    catch { case _: Throwable => None }
 
   /** Persist build parameters on a table as TBLPROPERTIES — the sidecar
     * that lets probe-time entry points validate they were called with the

@@ -1181,21 +1181,19 @@ object CorpusOps {
     * duplicates only re-produce candidates the scoring join dedups), so
     * an at-least-once replay degrades cost, never correctness — but
     * admit each increment once; key deliveries by batchId (the
-    * StreamingMedia ingest contract). */
+    * StreamingMedia ingest contract). The bands re-band with the
+    * geometry persisted on the band table ([[Dedup.nearDupIndexAppend]]). */
   def funnelStateAppend(docs: DataFrame, fpTable: String,
                         bandsTable: String, setsTable: String,
                         spanFpTable: String,
-                        fp: Column = md5(col("text")), minhashK: Int = 4,
-                        rowsPerBand: Int = 2, spanTokens: Int = 8,
-                        buckets: Int = 32): Unit = {
-    Bucketing.appendBucketed(docs.select(col("doc_id"), fp.as("fp")),
-      fpTable, "fp", buckets)
-    Dedup.nearDupIndexAppend(docs, bandsTable, setsTable, minhashK,
-      rowsPerBand, buckets)
-    Bucketing.appendBucketed(
+                        fp: Column = md5(col("text")),
+                        spanTokens: Int = 8): Unit = {
+    Bucketing.append(docs.select(col("doc_id"), fp.as("fp")), fpTable)
+    Dedup.nearDupIndexAppend(docs, bandsTable, setsTable)
+    Bucketing.append(
       Dedup.spanWindows(docs, spanTokens).select("doc_id", "fp")
         .distinct(),
-      spanFpTable, "fp", buckets)
+      spanFpTable)
   }
 
   /** The funnel state's RTBF tombstone ledger — one table per state,
@@ -1237,7 +1235,7 @@ object CorpusOps {
       require(spark.catalog.tableExists(t),
         s"funnelStateForget: state table '$t' does not exist")
     }
-    Bucketing.appendPlain(tombstoneIds.select("doc_id"),
+    Bucketing.append(tombstoneIds.select("doc_id"),
       funnelDeadTable(fpTable))
   }
 
@@ -1279,13 +1277,13 @@ object CorpusOps {
     * [[funnelStateForget]] is LOGICAL (the dead ledger stops ghosts
     * matching immediately) but the retired docs' fps, bands, and shingle
     * sets — for RTBF, content-bearing derived data — physically leave
-    * storage HERE. One distinct+anti-join rewrite per relation, bucket
-    * layout preserved (key and count read from the CATALOG — a stale
-    * caller parameter can't silently change the layout; r16 advisor
-    * finding), run on the maintenance cadence; schedule it inside the
-    * RTBF erasure SLA. The ledger itself is rewritten distinct and KEPT:
-    * it fences late at-least-once admit replays of retired docs (see
-    * funnelStateForget's re-entry contract).
+    * storage HERE. One distinct+anti-join [[Bucketing.rewrite]] per
+    * relation, bucket layout read from the catalogue, run on the
+    * maintenance cadence; schedule it inside the RTBF erasure SLA. The
+    * ledger itself is rewritten distinct and KEPT, last (each relation's
+    * rewrite reads it lazily — it is O(tombstones)): it fences late
+    * at-least-once admit replays of retired docs (see funnelStateForget's
+    * re-entry contract).
     *
     * Probe-equivalence contract: every relation is a SET under its probe
     * (fp/span by anti/semi join, bands by candidate generation whose
@@ -1297,37 +1295,25 @@ object CorpusOps {
     * forget round-trip (compacted state row-equal to a never-held
     * build).
     *
-    * The distinct rows are pinned (eager localCheckpoint) BEFORE the
-    * overwrite because [[Bucketing.writeBucketed]] drops the table first
-    * — writing a frame that still lazily reads the table being dropped
-    * would read nothing. At 100 TB, write to a sibling table and swap
-    * names instead of pinning state-sized rows in the block manager; the
-    * in-place form is the bench-scale expression of the same rewrite. */
+    * Each relation's distinct rows are written to a sibling table and
+    * swapped in by rename: nothing state-sized is pinned in the block
+    * manager, and a failed compaction leaves the state whole. */
   def funnelStateCompact(spark: org.apache.spark.sql.SparkSession,
                          fpTable: String, bandsTable: String,
-                         setsTable: String, spanFpTable: String,
-                         buckets: Int = 32): Unit = {
+                         setsTable: String, spanFpTable: String): Unit = {
     val deadT = funnelDeadTable(fpTable)
-    val dead: Option[DataFrame] =
-      if (!spark.catalog.tableExists(deadT)) None
-      else {
-        spark.catalog.refreshTable(deadT)
-        Some(spark.table(deadT).distinct()
-          .localCheckpoint(eager = true)) // pinned: read 5x + rewritten
+    val hasLedger = spark.catalog.tableExists(deadT)
+    if (hasLedger) spark.catalog.refreshTable(deadT)
+    Seq(fpTable, bandsTable, setsTable, spanFpTable).foreach { t =>
+      Bucketing.rewrite(spark, t) { rel =>
+        val live =
+          if (!hasLedger) rel
+          else rel.join(spark.table(deadT).distinct(), Seq("doc_id"),
+            "left_anti")
+        live.distinct()
       }
-    def rewrite(table: String, key: String): Unit = {
-      spark.catalog.refreshTable(table) // see incrementalStagesIndexed
-      val live = dead.fold(spark.table(table))(d =>
-        spark.table(table).join(d, Seq("doc_id"), "left_anti"))
-      val rows = live.distinct().localCheckpoint(eager = true)
-      Bucketing.writeBucketed(rows, table, key,
-        Bucketing.tableBuckets(spark, table).getOrElse(buckets))
     }
-    rewrite(fpTable, "fp")
-    rewrite(bandsTable, "bucket")
-    rewrite(setsTable, "doc_id")
-    rewrite(spanFpTable, "fp")
-    dead.foreach(d => Bucketing.writePlain(d, deadT))
+    if (hasLedger) Bucketing.rewrite(spark, deadT)(_.distinct())
   }
 
   /** The incremental funnel's stage frames — order-exact against the

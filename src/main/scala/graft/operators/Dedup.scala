@@ -447,18 +447,31 @@ object Dedup {
       rowsPerBand.toString)
   }
 
+  /** The banding geometry (minhashK, rowsPerBand) persisted on a
+    * [[nearDupWriteIndex]] band table — what every append must re-band
+    * with. A table without the sidecar has no known geometry and fails
+    * loudly. */
+  private def bandParams(spark: org.apache.spark.sql.SparkSession,
+                         bandsTable: String): (Int, Int) = {
+    def param(key: String): Int =
+      Bucketing.getTableParam(spark, bandsTable, key).getOrElse(
+        throw new IllegalArgumentException(s"$bandsTable carries no " +
+          s"graft.$key — build it with nearDupWriteIndex first")).toInt
+    (param("minhash_k"), param("rows_per_band"))
+  }
+
   /** FORGET — remove documents from the persisted near-dup index: the
     * text half of the compliance step [[Multimodal.mediaIndexForget]]
     * closes for the sketch indexes. After a takedown the corpus store
     * drops the removed docs' rows, but the band/sets relations still
     * carry their signatures — later probes keep matching ghosts, and the
     * shingle sets literally CONTAIN the removed text (for RTBF they must
-    * go, not just stop matching). One anti-join rewrite per relation
-    * against the tombstone ids, bucket layouts preserved. Index-sized,
-    * never a corpus re-shingle; batch removals to the compaction
-    * cadence. Round-trip spec: build(A ∪ B) then forget(B) equals
-    * build(A) row-for-row, and a probe that near-duplicates ONLY a
-    * forgotten doc survives afterwards.
+    * go, not just stop matching). One anti-join [[Bucketing.rewrite]] per
+    * relation against the tombstone ids, bucket layouts and the banding
+    * sidecar preserved. Index-sized, never a corpus re-shingle; batch
+    * removals to the compaction cadence. Round-trip spec: build(A ∪ B)
+    * then forget(B) equals build(A) row-for-row, and a probe that
+    * near-duplicates ONLY a forgotten doc survives afterwards.
     *
     * The funnel's CONTENT-keyed relations (fp universe, span census)
     * forget through [[graft.operators.CorpusOps.funnelStateForget]]'s
@@ -469,21 +482,10 @@ object Dedup {
     * the retired rows — O(tombstones) to forget, no corpus rebuild. */
   def nearDupIndexForget(spark: org.apache.spark.sql.SparkSession,
                          bandsTable: String, setsTable: String,
-                         tombstoneIds: DataFrame,
-                         buckets: Int = 32): Unit = {
+                         tombstoneIds: DataFrame): Unit = {
     val ids = tombstoneIds.select("doc_id")
-    def rewrite(table: String, key: String): Unit = {
-      spark.catalog.refreshTable(table)
-      val kept = spark.table(table).join(ids, Seq("doc_id"), "left_anti")
-        .localCheckpoint(eager = true) // pinned before the drop+overwrite
-      // bucket count from the CATALOG, not the parameter — a mismatched
-      // caller value would silently recreate the table with a different
-      // layout and break probe co-location (r16 advisor finding)
-      Bucketing.writeBucketed(kept, table, key,
-        Bucketing.tableBuckets(spark, table).getOrElse(buckets))
-    }
-    rewrite(bandsTable, "bucket")
-    rewrite(setsTable, "doc_id")
+    Seq(bandsTable, setsTable).foreach(t =>
+      Bucketing.rewrite(spark, t)(_.join(ids, Seq("doc_id"), "left_anti")))
   }
 
   /** [[incrementalNearDedup]] against a PERSISTED index
@@ -1434,19 +1436,21 @@ object Dedup {
   /** Index MAINTENANCE for the persisted near-dup index: append a new
     * batch's LSH bands and shingle sets to the [[nearDupWriteIndex]] tables
     * IN PLACE, preserving their bucketed layout (probe joins stay
-    * co-located after the append — Spark validates the bucket spec against
-    * the catalog). This is the corpus-version upgrade path at 100 TB: one
-    * signature pass over the INCREMENT instead of re-signing the whole
-    * corpus, after which future increments probe a corpus+batch index.
-    * Typical cycle: probe batch → deliver survivors → append survivors
-    * here. EAGER: runs the two append jobs at call time, like the build. */
+    * co-located after the append — [[Bucketing.append]] takes the layout
+    * from the catalogue). The batch is banded with the geometry persisted
+    * on the band table ([[bandParams]]), so appended docs band exactly as
+    * the probes that validate against that sidecar expect. This is the
+    * corpus-version upgrade path at 100 TB: one signature pass over the
+    * INCREMENT instead of re-signing the whole corpus, after which future
+    * increments probe a corpus+batch index. Typical cycle: probe batch →
+    * deliver survivors → append survivors here. EAGER: runs the two
+    * append jobs at call time, like the build. */
   def nearDupIndexAppend(docs: DataFrame, bandsTable: String,
-                         setsTable: String, minhashK: Int = 4,
-                         rowsPerBand: Int = 2, buckets: Int = 32): Unit = {
-    Bucketing.appendBucketed(
-      bandTable(minhash(docs, minhashK), rowsPerBand), bandsTable,
-      "bucket", buckets)
-    Bucketing.appendBucketed(shingleSets(docs), setsTable, "doc_id", buckets)
+                         setsTable: String): Unit = {
+    val (minhashK, rowsPerBand) = bandParams(docs.sparkSession, bandsTable)
+    Bucketing.append(bandTable(minhash(docs, minhashK), rowsPerBand),
+      bandsTable)
+    Bucketing.append(shingleSets(docs), setsTable)
   }
 
   /** EXACT-SUBSTRING span dedup (the suffix-array dedup of "Deduplicating

@@ -26,9 +26,10 @@ object Forget {
     * stats ([[TextAnalysis.searchIndexForget]] — the stats sidecar is
     * re-derived so idf/avgdl can't drift), IVF vectors
     * ([[Similarity.ivfIndexForget]]), and the image/audio/video sketch
-    * tables ([[Multimodal.mediaIndexForget]]). Each per-index call keeps
-    * its proven contract (anti-join rewrite, bucket count resolved from
-    * the catalog, forgotten ≡ never-held — all spec-pinned on the
+    * tables ([[Multimodal.mediaIndexForget]]). Every per-index call is
+    * one anti-join through [[Bucketing.rewrite]] — layout and `graft.*`
+    * sidecar from the catalogue, new rows staged under a sibling name and
+    * swapped in by rename, forgotten ≡ never-held (spec-pinned on the
     * underlying ops); this orchestrator adds the ONE-CALL guarantee plus
     * an audit trail: one (index, rows_before, rows_after) row per
     * rewritten table, in rewrite order — the evidence frame a compliance

@@ -1236,10 +1236,8 @@ object Multimodal {
 
   /** Index MAINTENANCE: hash and append a new batch's sketches, bucket
     * layout preserved — O(batch), never a media-library rewrite. */
-  def phashIndexAppend(newPayload: DataFrame, table: String,
-                       buckets: Int = 16): Unit =
-    Bucketing.appendBucketed(perceptualHashBase(newPayload), table,
-      "h", buckets)
+  def phashIndexAppend(newPayload: DataFrame, table: String): Unit =
+    Bucketing.append(perceptualHashBase(newPayload), table)
 
   /** MEDIA TAKEDOWN served off the persisted index: hash the request
     * payloads (the only codec work in the whole query), band the
@@ -1287,10 +1285,8 @@ object Multimodal {
 
   /** Index MAINTENANCE: fingerprint and append a new batch, bucket
     * layout preserved — O(batch). */
-  def audioIndexAppend(newPayload: DataFrame, table: String,
-                       buckets: Int = 16): Unit =
-    Bucketing.appendBucketed(audioFingerprintBase(newPayload), table,
-      "h", buckets)
+  def audioIndexAppend(newPayload: DataFrame, table: String): Unit =
+    Bucketing.append(audioFingerprintBase(newPayload), table)
 
   /** The shared single-sketch takedown serve: request hashes band
     * value-level against the index's distinct sketches, popcount
@@ -1374,31 +1370,22 @@ object Multimodal {
     * the serving index still carries the removed docs' sketches — every
     * later probe keeps matching ghosts, and for RTBF the sketch itself
     * is derived data that must go. One anti-join rewrite of the index
-    * against the tombstone ids, bucket layout preserved (same key, same
-    * count — serves stay co-located). Shared by the image, audio, AND
-    * video tables (all bucketed by `h`; extra columns ride along).
+    * against the tombstone ids through [[Bucketing.rewrite]], bucket
+    * layout read from the catalogue (same key, same count — serves stay
+    * co-located). Shared by the image, audio, AND video tables (all
+    * bucketed by `h`; extra columns ride along).
     *
     * Cost is index-sized, not corpus-sized — no media bytes are ever
     * re-read — and it batches: collect a day's removals, forget once
-    * (the compaction cadence). The kept rows are pinned (eager
-    * localCheckpoint) before the overwrite because writeBucketed drops
-    * the table first; at 100 TB write a sibling table and swap names
-    * (the funnelStateCompact note). Round-trip contract, spec-pinned:
+    * (the compaction cadence). The kept rows are written to a sibling
+    * table and swapped in by rename, so nothing is pinned and a failed
+    * forget leaves the index whole. Round-trip contract, spec-pinned:
     * build(A ∪ B) then forget(B) holds exactly build(A)'s rows, and a
     * request identical to a forgotten asset matches nothing. */
   def mediaIndexForget(spark: org.apache.spark.sql.SparkSession,
-                       table: String, tombstoneIds: DataFrame,
-                       buckets: Int = 16): Unit = {
-    spark.catalog.refreshTable(table)
-    val kept = spark.table(table)
-      .join(tombstoneIds.select("doc_id"), Seq("doc_id"), "left_anti")
-      .localCheckpoint(eager = true)
-    // bucket count from the CATALOG (r16 advisor finding): a mismatched
-    // caller value would silently recreate the table with a different
-    // layout and break serve co-location
-    Bucketing.writeBucketed(kept, table, "h",
-      Bucketing.tableBuckets(spark, table).getOrElse(buckets))
-  }
+                       table: String, tombstoneIds: DataFrame): Unit =
+    Bucketing.rewrite(spark, table)(
+      _.join(tombstoneIds.select("doc_id"), Seq("doc_id"), "left_anti"))
 
   /** Persist the video keyframe-sketch table (doc_id, slot, h)
     * bucketed by `h` — 24 bytes per video, hashed once at ingest. */
@@ -1409,10 +1396,8 @@ object Multimodal {
 
   /** Index MAINTENANCE: sample + hash a new batch's keyframes and
     * append, bucket layout preserved — O(batch). */
-  def videoIndexAppend(newPayload: DataFrame, table: String,
-                       buckets: Int = 16): Unit =
-    Bucketing.appendBucketed(videoFingerprintBase(newPayload), table,
-      "h", buckets)
+  def videoIndexAppend(newPayload: DataFrame, table: String): Unit =
+    Bucketing.append(videoFingerprintBase(newPayload), table)
 
   /** VIDEO takedown served off the persisted index — the
     * [[mediaTakedownStatus]] serve at video semantics: per timeline

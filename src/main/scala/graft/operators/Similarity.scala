@@ -1401,41 +1401,32 @@ object Similarity {
     * vectors to cells with the SAME centroid table the index was built
     * with and append them to the [[ivfWriteIndex]] table in place,
     * preserving its cell-bucketed layout (probe joins stay co-located
-    * after the append — Spark validates the bucket spec against the
-    * catalog). The 100 TB corpus-growth path: one map-only assignment pass
-    * over the INCREMENT instead of re-assigning the whole corpus, after
-    * which [[knnIvfIndexed]] probes corpus+batch transparently. Centroids
-    * are NOT refit — cell quality for the appended rows is whatever the
-    * original fit gives them (the standard IVF add contract; refit+rebuild
-    * once drift shows up in [[ivfStats]] occupancy). EAGER: runs the
-    * append job at call time, like the build. */
-  def ivfIndexAppend(emb: DataFrame, centroids: DataFrame, table: String,
-                     buckets: Int = 32): Unit =
-    Bucketing.appendBucketed(ivfAssign(emb, centroids), table, "cell",
-      buckets, sortBy = Some("vec_id"))
+    * after the append — [[Bucketing.append]] takes the layout from the
+    * catalogue). The 100 TB corpus-growth path: one map-only assignment
+    * pass over the INCREMENT instead of re-assigning the whole corpus,
+    * after which [[knnIvfIndexed]] probes corpus+batch transparently.
+    * Centroids are NOT refit — cell quality for the appended rows is
+    * whatever the original fit gives them (the standard IVF add contract;
+    * refit+rebuild once drift shows up in [[ivfStats]] occupancy). EAGER:
+    * runs the append job at call time, like the build. */
+  def ivfIndexAppend(emb: DataFrame, centroids: DataFrame,
+                     table: String): Unit =
+    Bucketing.append(ivfAssign(emb, centroids), table)
 
   /** FORGET — remove vectors from the persisted IVF index (the
     * [[graft.operators.Multimodal.mediaIndexForget]] step at embedding
     * width — for RTBF the embedding itself is derived data that must
-    * go): one anti-join rewrite on vec_id, cell-bucketed layout
-    * preserved. Assignment is per-vector deterministic under the fixed
+    * go): one anti-join [[Bucketing.rewrite]] on vec_id, cell-bucketed
+    * layout preserved. Assignment is per-vector deterministic under the fixed
     * centroids, so the forgotten index IS the never-held index
     * row-for-row (spec-pinned) and later [[knnIvfIndexed]] probes can
     * never return a removed vector. Centroids are NOT refit — same
     * contract as [[ivfIndexAppend]]; refit+rebuild once [[ivfStats]]
     * occupancy drifts. */
   def ivfIndexForget(spark: SparkSession, table: String,
-                     tombstoneIds: DataFrame, buckets: Int = 32): Unit = {
-    spark.catalog.refreshTable(table)
-    val kept = spark.table(table)
-      .join(tombstoneIds.select("vec_id"), Seq("vec_id"), "left_anti")
-      .localCheckpoint(eager = true)
-    // bucket count from the CATALOG (r16 advisor finding) — see
-    // Dedup.nearDupIndexForget
-    Bucketing.writeBucketed(kept, table, "cell",
-      Bucketing.tableBuckets(spark, table).getOrElse(buckets),
-      sortBy = Some("vec_id"))
-  }
+                     tombstoneIds: DataFrame): Unit =
+    Bucketing.rewrite(spark, table)(
+      _.join(tombstoneIds.select("vec_id"), Seq("vec_id"), "left_anti"))
 
   /** IVF ANN query: `nprobe` nearest cells per query (tiny |Q| × nlist
     * broadcast cross), exact cosine + top-k inside the probed cells.

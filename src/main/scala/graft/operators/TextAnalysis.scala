@@ -1741,36 +1741,28 @@ object TextAnalysis {
     * [[graft.operators.Multimodal.mediaIndexForget]] compliance step at
     * search width, and the one with the sharpest RTBF teeth — the
     * postings literally enumerate the removed documents' tokens. One
-    * anti-join rewrite of the postings (bucket layout preserved), and the
-    * stats sidecar is RE-DERIVED from the kept postings (every doc
-    * carries its dl on each posting row, so n_docs/sum_dl recompute
-    * exactly — stats can never drift from what the postings serve; BM25
-    * idf and length norms shift accordingly, exactly as a never-held
-    * build would read). Index-sized, never a corpus re-tokenize.
-    * Round-trip spec: build(A ∪ B) then forget(B) serves bit-identically
-    * to build(A). */
+    * anti-join [[Bucketing.rewrite]] of the postings (bucket layout
+    * preserved), then the stats sidecar is RE-DERIVED from the swapped-in
+    * postings (every doc carries its dl on each posting row, so
+    * n_docs/sum_dl recompute exactly — stats can never drift from what
+    * the postings serve; BM25 idf and length norms shift accordingly,
+    * exactly as a never-held build would read). Index-sized, never a
+    * corpus re-tokenize. Round-trip spec: build(A ∪ B) then forget(B)
+    * serves bit-identically to build(A). */
   def searchIndexForget(spark: org.apache.spark.sql.SparkSession,
                         postingsTable: String, statsTable: String,
-                        tombstoneIds: DataFrame,
-                        buckets: Int = 32): Unit = {
-    spark.catalog.refreshTable(postingsTable)
-    val kept = spark.table(postingsTable)
-      .join(tombstoneIds.select("doc_id"), Seq("doc_id"), "left_anti")
-      .localCheckpoint(eager = true) // pinned before the drop+overwrite
-    // bucket count from the CATALOG (r16 advisor finding) — see
-    // Dedup.nearDupIndexForget
-    Bucketing.writeBucketed(kept, postingsTable, "token",
-      Bucketing.tableBuckets(spark, postingsTable).getOrElse(buckets),
-      sortBy = Some("token"))
-    // coalesce: a tombstone set covering EVERY indexed doc leaves an empty
-    // kept frame, and sum over an empty group is NULL — a (0, NULL) stats
+                        tombstoneIds: DataFrame): Unit = {
+    Bucketing.rewrite(spark, postingsTable)(
+      _.join(tombstoneIds.select("doc_id"), Seq("doc_id"), "left_anti"))
+    // coalesce: a tombstone set covering EVERY indexed doc leaves empty
+    // postings, and sum over an empty group is NULL — a (0, NULL) stats
     // row would null-poison the avgdl/idf arithmetic downstream instead of
     // serving the honest empty index (r16 advisor finding)
-    Bucketing.writePlain(
-      kept.groupBy("doc_id").agg(max(col("dl")).as("dl"))
+    Bucketing.rewrite(spark, statsTable)(_ =>
+      spark.table(postingsTable)
+        .groupBy("doc_id").agg(max(col("dl")).as("dl"))
         .agg(count(lit(1)).as("n_docs"),
-          coalesce(sum(col("dl")), lit(0L)).as("sum_dl")),
-      statsTable)
+          coalesce(sum(col("dl")), lit(0L)).as("sum_dl")))
   }
 
   /** The postings rows for `docs` — shared by build, append, and the
@@ -1794,36 +1786,24 @@ object TextAnalysis {
     * full rebuild (driver-gated via doc_search_bm25_appended's shared
     * oracle and spec-gated against the inline op).
     *
-    * MAINTENANCE-WINDOW CONTRACT (the [[graft.streaming.StreamingSearch]]
-    * commit-point discipline, stated for the multi-step catalog update):
-    * the update is postings-append → stats staged under
-    * `<statsTable>_stage` → drop old stats → catalog rename stage→live.
-    * The new stats are fully WRITTEN (staged) before the live name is
-    * ever touched, so no crash point loses the folded counts: a crash
-    * after the append sees appended postings with stale stats (scores
-    * slightly off until re-run — the documented LSM-delta bargain, not
-    * corruption), and a crash between drop and rename leaves the counts
-    * intact in the stage table with the live name briefly unresolvable —
-    * re-running the append (idempotence left to the caller's batch
-    * ledger) or renaming the stage completes it. A concurrent probe
-    * during the two catalog ops may fail to resolve the stats table and
-    * should retry; probes never see HALF-written stats. */
+    * MAINTENANCE-WINDOW CONTRACT: postings [[Bucketing.append]], then the
+    * folded stats through [[Bucketing.rewrite]] — the one rule for a
+    * changed index table: the new stats are fully written under a sibling
+    * name before the live name is touched, then swapped in by rename. A
+    * crash after the append sees appended postings with stale stats
+    * (scores slightly off until re-run — the documented LSM-delta
+    * bargain, not corruption; idempotence is left to the caller's batch
+    * ledger); a crash inside the rewrite leaves the old stats whole. A
+    * concurrent probe during the drop+rename may fail to resolve the
+    * stats table and should retry; probes never see HALF-written stats. */
   def searchIndexAppend(spark: org.apache.spark.sql.SparkSession,
                         newDocs: DataFrame, postingsTable: String,
-                        statsTable: String, buckets: Int = 32): Unit = {
-    Bucketing.appendBucketed(searchPostings(newDocs), postingsTable,
-      "token", buckets, sortBy = Some("token"))
-    // one-row read-modify-write; materialize, stage, then swap
-    val old = spark.table(statsTable).collect().head
-    val inc = searchStats(newDocs).collect().head
-    import spark.implicits._
-    val stage = statsTable + "_stage"
-    Bucketing.writePlain(
-      Seq((old.getLong(0) + inc.getLong(0),
-        old.getLong(1) + inc.getLong(1))).toDF("n_docs", "sum_dl"),
-      stage)
-    spark.sql(s"DROP TABLE IF EXISTS $statsTable")
-    spark.sql(s"ALTER TABLE $stage RENAME TO $statsTable")
+                        statsTable: String): Unit = {
+    Bucketing.append(searchPostings(newDocs), postingsTable)
+    Bucketing.rewrite(spark, statsTable)(old =>
+      old.unionByName(searchStats(newDocs))
+        .agg(sum(col("n_docs")).as("n_docs"),
+          sum(col("sum_dl")).as("sum_dl")))
   }
 
   /** BM25 top-k served OFF THE INDEX: reads only the query terms'
@@ -2221,29 +2201,20 @@ object TextAnalysis {
     * selection is per-doc deterministic; driver-gated via
     * doc_winnow_pairs_appended's shared oracle). */
   def winnowIndexAppend(newDocs: DataFrame, table: String, gram: Int = 8,
-                        window: Int = 4, buckets: Int = 32): Unit =
-    Bucketing.appendBucketed(winnowingSelected(newDocs, gram, window),
-      table, "fp", buckets)
+                        window: Int = 4): Unit =
+    Bucketing.append(winnowingSelected(newDocs, gram, window), table)
 
   /** FORGET — remove documents from the persisted winnow index (the
     * [[graft.operators.Multimodal.mediaIndexForget]] step at fingerprint
-    * width): one anti-join rewrite on doc_id, fp-bucketed layout
-    * preserved. The selection is per-doc deterministic, so the forgotten
-    * index IS the never-held index row-for-row (spec-pinned), and later
-    * [[winnowPairsIndexed]] probes can never pair against a removed
-    * doc's fingerprints. */
+    * width): one anti-join [[Bucketing.rewrite]] on doc_id, fp-bucketed
+    * layout preserved. The selection is per-doc deterministic, so the
+    * forgotten index IS the never-held index row-for-row (spec-pinned),
+    * and later [[winnowPairsIndexed]] probes can never pair against a
+    * removed doc's fingerprints. */
   def winnowIndexForget(spark: org.apache.spark.sql.SparkSession,
-                        table: String, tombstoneIds: DataFrame,
-                        buckets: Int = 32): Unit = {
-    spark.catalog.refreshTable(table)
-    val kept = spark.table(table)
-      .join(tombstoneIds.select("doc_id"), Seq("doc_id"), "left_anti")
-      .localCheckpoint(eager = true)
-    // bucket count from the CATALOG (r16 advisor finding) — see
-    // Dedup.nearDupIndexForget
-    Bucketing.writeBucketed(kept, table, "fp",
-      Bucketing.tableBuckets(spark, table).getOrElse(buckets))
-  }
+                        table: String, tombstoneIds: DataFrame): Unit =
+    Bucketing.rewrite(spark, table)(
+      _.join(tombstoneIds.select("doc_id"), Seq("doc_id"), "left_anti"))
 
   /** [[winnowPairs]] served OFF THE INDEX: same pairing core, same
     * output contract, same DuckDB oracle — but each of the three plan

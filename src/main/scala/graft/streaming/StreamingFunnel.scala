@@ -150,7 +150,7 @@ object StreamingFunnel {
                     rowsPerBand: Int = 2, spanTokens: Int = 8,
                     minNovelTokens: Long = 20,
                     estimatedItems: Long = 1L << 16,
-                    numBits: Long = 1L << 19, buckets: Int = 32,
+                    numBits: Long = 1L << 19,
                     trigger: Trigger = MicroBatch.Interval)
                    (deliver: (DataFrame, Long) => Unit): StreamingQuery =
     MicroBatch.start(docs, checkpointDir, trigger) { (batch, batchId) =>
@@ -162,8 +162,7 @@ object StreamingFunnel {
       deliver(CorpusOps.globalAttrition(st.init :+ survivors,
         CorpusOps.IncrementalStageSpecs), batchId)
       CorpusOps.funnelStateAppend(survivors, fpTable, bandsTable,
-        setsTable, spanFpTable, fp, minhashK, rowsPerBand, spanTokens,
-        buckets)
+        setsTable, spanFpTable, fp, spanTokens)
     }
 
   /** CURATION funnel served ONLINE — the live form of

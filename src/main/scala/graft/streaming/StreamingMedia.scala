@@ -36,19 +36,17 @@ object StreamingMedia {
 
   /** Append each batch's image sketches to the persisted index. */
   def ingestImages(assets: DataFrame, table: String, checkpointDir: String,
-                   buckets: Int = 16,
                    trigger: Trigger = MicroBatch.Interval): StreamingQuery =
     MicroBatch.start(assets, checkpointDir, trigger) { (batch, _) =>
-      Multimodal.phashIndexAppend(batch, table, buckets)
+      Multimodal.phashIndexAppend(batch, table)
     }
 
   /** Append each batch's video keyframe sketches to the persisted
     * index. */
   def ingestVideos(assets: DataFrame, table: String, checkpointDir: String,
-                   buckets: Int = 16,
                    trigger: Trigger = MicroBatch.Interval): StreamingQuery =
     MicroBatch.start(assets, checkpointDir, trigger) { (batch, _) =>
-      Multimodal.videoIndexAppend(batch, table, buckets)
+      Multimodal.videoIndexAppend(batch, table)
     }
 
   /** Serve a stream of image takedown requests (doc_id, payload)

@@ -11,7 +11,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * no writer can drift back to its own tmp+rename, marker file or append
   * that a replayed batch would duplicate. Keeps the writer start single
   * too: `MicroBatch` is the one `foreachBatch` call and the one batch
-  * interval. */
+  * interval. And keeps the index-table change single: `Bucketing` is the
+  * one place that drops, renames, saves or buckets a catalogue table. */
 class CommitPolicySpec extends AnyFunSuite {
 
   test("no writer under graft/sinks or graft/streaming renames, appends " +
@@ -49,5 +50,24 @@ class CommitPolicySpec extends AnyFunSuite {
         comment.replaceAllIn(Files.readString(p), "")).isDefined)
     assert(offenders.isEmpty, "start through MicroBatch.start on " +
       "MicroBatch.Interval: " + offenders.mkString(", "))
+  }
+
+  test("no file under graft/operators or graft/streaming drops, renames, " +
+    "saves or buckets a catalogue table outside Bucketing") {
+    val comment = """(?s)/\*.*?\*/|//[^\n]*""".r
+    val own = """DROP TABLE|RENAME TO|\.saveAsTable\b|\.bucketBy\s*\(""".r
+    val files = Seq("operators", "streaming").flatMap { d =>
+      val walk = Files.walk(Paths.get(s"src/main/scala/graft/$d"))
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally walk.close()
+    }
+    assert(files.exists(_.getFileName.toString == "Bucketing.scala"))
+    val offenders = files
+      .filter(_.getFileName.toString != "Bucketing.scala")
+      .filter(p => own.findFirstIn(
+        comment.replaceAllIn(Files.readString(p), "")).isDefined)
+    assert(offenders.isEmpty, "change an index table through " +
+      "Bucketing.writeBucketed/writePlain/append/rewrite: " +
+      offenders.mkString(", "))
   }
 }

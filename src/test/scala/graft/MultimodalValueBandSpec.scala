@@ -169,7 +169,7 @@ class MultimodalValueBandSpec extends SparkTestBase {
       "graft_test_phidx_a", buckets = 4)
     Multimodal.phashIndexAppend(
       Multimodal.synthBmpPayload(docs.filter(col("doc_id") % 2 === 1)),
-      "graft_test_phidx_a", buckets = 4)
+      "graft_test_phidx_a")
     val gotAppended = Multimodal
       .mediaTakedownStatus(s, "graft_test_phidx_a", requests)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
@@ -181,7 +181,7 @@ class MultimodalValueBandSpec extends SparkTestBase {
     // be matched as a holder), and the brute answer restricted to the
     // surviving holder set confirms no ghost rows linger
     Multimodal.mediaIndexForget(s, "graft_test_phidx_a",
-      docs.filter(col("doc_id") % 5 === 0).select("doc_id"), buckets = 4)
+      docs.filter(col("doc_id") % 5 === 0).select("doc_id"))
     val gotForgot = Multimodal
       .mediaTakedownStatus(s, "graft_test_phidx_a", requests)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))

@@ -1265,8 +1265,7 @@ class NorthStarSpec extends SparkTestBase {
       20L -> "brand new second corpus version text arriving later"))
     Dedup.nearDupWriteIndex(v1, "test_nda_bands", "test_nda_sets",
       buckets = 2)
-    Dedup.nearDupIndexAppend(batch, "test_nda_bands", "test_nda_sets",
-      buckets = 2)
+    Dedup.nearDupIndexAppend(batch, "test_nda_bands", "test_nda_sets")
     // an increment duplicating v1 (30), the appended batch (31), and
     // nothing (32)
     val probe = docsDf(Seq(30L -> dupText,
@@ -1280,6 +1279,27 @@ class NorthStarSpec extends SparkTestBase {
       "test_ndr_bands", "test_ndr_sets").collect().map(_.getLong(0)).toSet
     assert(viaAppend == viaRebuild)
     assert(viaAppend == Set(32L))
+  }
+
+  test("Dedup.nearDupIndexAppend re-bands with the index's persisted " +
+    "geometry: a default-form append onto a k=8 index is caught by k=8 " +
+    "probes") {
+    val s = spark
+    val v1 = docsDf(Seq(
+      2L -> "completely different words about spark catalyst physical plans"))
+    val batch = docsDf(Seq(
+      20L -> "brand new second corpus version text arriving later"))
+    try {
+      Dedup.nearDupWriteIndex(v1, "test_ndg_bands", "test_ndg_sets",
+        minhashK = 8, rowsPerBand = 4)
+      Dedup.nearDupIndexAppend(batch, "test_ndg_bands", "test_ndg_sets")
+      val probe = docsDf(Seq(
+        21L -> "brand new second corpus version text arriving later"))
+      assert(Dedup.incrementalNearDedupIndexed(s, probe, "test_ndg_bands",
+        "test_ndg_sets", minhashK = 8, rowsPerBand = 4).count() === 0L,
+        "the identical-text request must drop against the appended doc")
+    } finally Seq("test_ndg_bands", "test_ndg_sets")
+      .foreach(t => s.sql(s"DROP TABLE IF EXISTS $t"))
   }
 
   test("Dedup.nearDupIndexForget: forgetting a doc equals an index that " +
@@ -1297,7 +1317,7 @@ class NorthStarSpec extends SparkTestBase {
       "test_ndf_bands", "test_ndf_sets").count() === 0L,
       "pre-forget: the near-dup of doc 1 must drop")
     Dedup.nearDupIndexForget(s, "test_ndf_bands", "test_ndf_sets",
-      removed.select("doc_id"), buckets = 2)
+      removed.select("doc_id"))
     assert(Dedup.incrementalNearDedupIndexed(s, probe,
       "test_ndf_bands", "test_ndf_sets")
       .collect().map(_.getLong(0)).toSet === Set(40L),
@@ -1342,7 +1362,7 @@ class NorthStarSpec extends SparkTestBase {
       // in-place forget rewrite: sidecar carried, catalog bucket count
       // wins over a WRONG caller parameter
       Dedup.nearDupIndexForget(s, "test_bp_bands", "test_bp_sets",
-        docsDf(Seq(1L -> "x")).select("doc_id"), buckets = 16)
+        docsDf(Seq(1L -> "x")).select("doc_id"))
       assert(Bucketing.getTableParam(s, "test_bp_bands", "minhash_k")
         === Some("4"), "the params sidecar must survive the rewrite")
       assert(Bucketing.tableBuckets(s, "test_bp_bands") === Some(2),
@@ -2099,7 +2119,7 @@ class NorthStarSpec extends SparkTestBase {
     Similarity.ivfWriteIndex(emb.filter(col("vec_id") % 2 === 0), cents,
       "ivf_idx_grown", buckets = 8)
     Similarity.ivfIndexAppend(emb.filter(col("vec_id") % 2 =!= 0), cents,
-      "ivf_idx_grown", buckets = 8)
+      "ivf_idx_grown")
     try {
       val full = Similarity.knnIvfIndexed(spark, "ivf_idx_full", cents,
         col("vec_id") < 4, k = 3, nprobe = 2).collect().toSet
@@ -2125,7 +2145,7 @@ class NorthStarSpec extends SparkTestBase {
     val cents = Similarity.ivfSeedCentroids(emb, 8)
     Similarity.ivfWriteIndex(emb, cents, "ivf_idx_fgt", buckets = 8)
     Similarity.ivfIndexForget(spark, "ivf_idx_fgt",
-      emb.filter(col("vec_id") % 2 =!= 0).select("vec_id"), buckets = 8)
+      emb.filter(col("vec_id") % 2 =!= 0).select("vec_id"))
     Similarity.ivfWriteIndex(emb.filter(col("vec_id") % 2 === 0), cents,
       "ivf_idx_fref", buckets = 8)
     try {

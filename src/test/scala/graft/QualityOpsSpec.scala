@@ -1097,8 +1097,7 @@ class QualityOpsSpec extends SparkTestBase {
         buckets = 4)
       // an at-least-once replay: the same increment admitted TWICE
       (1 to 2).foreach { _ =>
-        CorpusOps.funnelStateAppend(inc, tA(0), tA(1), tA(2), tA(3),
-          buckets = 4)
+        CorpusOps.funnelStateAppend(inc, tA(0), tA(1), tA(2), tA(3))
       }
       // the reference: a fresh build over the same logical corpus
       CorpusOps.funnelWriteState(corpus.unionByName(inc), tB(0), tB(1),
@@ -1113,8 +1112,7 @@ class QualityOpsSpec extends SparkTestBase {
       val fresh = counts(tB)
       assert(bloated.zip(fresh).forall { case (a, b) => a > b },
         s"replayed append must bloat every relation: $bloated vs $fresh")
-      CorpusOps.funnelStateCompact(s, tA(0), tA(1), tA(2), tA(3),
-        buckets = 4)
+      CorpusOps.funnelStateCompact(s, tA(0), tA(1), tA(2), tA(3))
       assert(counts(tA) === fresh,
         "compaction must restore fresh-build row counts")
       assert(rows(CorpusOps.curationFunnelIncrementalIndexed(s, probe,
@@ -1208,8 +1206,7 @@ class QualityOpsSpec extends SparkTestBase {
       // compact physically purges the retired rows: every relation's row
       // count equals the never-held build's, probes unchanged, and the
       // ledger survives (distinct) as the late-replay fence
-      CorpusOps.funnelStateCompact(s, tF(0), tF(1), tF(2), tF(3),
-        buckets = 4)
+      CorpusOps.funnelStateCompact(s, tF(0), tF(1), tF(2), tF(3))
       assert(counts(tF) === counts(tN),
         "post-compact state must be row-count-equal to never-held")
       assert(probeF() === neverHeld, "probe-equivalence after the purge")
@@ -1222,8 +1219,7 @@ class QualityOpsSpec extends SparkTestBase {
         reentry, tF(0), tF(1), tF(2), tF(3))
       assert(rows(admitted).map(_._4).sum === 0L,
         "forgotten content must be admittable under a fresh id")
-      CorpusOps.funnelStateAppend(reentry, tF(0), tF(1), tF(2), tF(3),
-        buckets = 4)
+      CorpusOps.funnelStateAppend(reentry, tF(0), tF(1), tF(2), tF(3))
       val second = rows(CorpusOps.curationFunnelIncrementalIndexed(s,
         df(Seq((502L, mTxt))), tF(0), tF(1), tF(2), tF(3)))
       assert(second.map(t => (t._2, t._4)) === Seq(

@@ -8,6 +8,11 @@ class SearchIndexSpec extends SparkTestBase {
 
   private val terms = Seq("hash", "join", "window")
 
+  /** The catalogue's bucket spec (columns, count, sort columns). */
+  private def bucketSpec(t: String) =
+    spark.sessionState.catalog.getTableMetadata(
+      org.apache.spark.sql.catalyst.TableIdentifier(t)).bucketSpec
+
   test("bm25Indexed equals the inline bm25Search bit-for-bit; the probe " +
     "prunes to the query terms' buckets; append equals rebuild") {
     val s = spark
@@ -33,9 +38,10 @@ class SearchIndexSpec extends SparkTestBase {
       // maintenance: 9/10 build + 1/10 append ≡ the full build's probe
       TextAnalysis.searchWriteIndex(docs.filter(col("doc_id") % 10 =!= 0),
         "srch_ap", "srch_as", buckets = 8)
+      val built = bucketSpec("srch_ap")
       TextAnalysis.searchIndexAppend(s,
-        docs.filter(col("doc_id") % 10 === 0), "srch_ap", "srch_as",
-        buckets = 8)
+        docs.filter(col("doc_id") % 10 === 0), "srch_ap", "srch_as")
+      assert(bucketSpec("srch_ap") == built && built.nonEmpty)
       val appended = TextAnalysis.bm25Indexed(s, terms, "srch_ap",
         "srch_as", k = 10).collect()
         .map(r => (r.getLong(0), r.getDouble(1))).toSeq
@@ -159,7 +165,7 @@ class SearchIndexSpec extends SparkTestBase {
       TextAnalysis.winnowWriteIndex(docs.filter(col("doc_id") % 10 =!= 0),
         "srch_wna", buckets = 8)
       TextAnalysis.winnowIndexAppend(docs.filter(col("doc_id") % 10 === 0),
-        "srch_wna", buckets = 8)
+        "srch_wna")
       def rows(df: org.apache.spark.sql.DataFrame) =
         df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
           .sorted.toSeq
@@ -194,9 +200,10 @@ class SearchIndexSpec extends SparkTestBase {
       // search: full build, forget the %10==0 slice ≡ build without it
       TextAnalysis.searchWriteIndex(docs, "srch_fp", "srch_fs",
         buckets = 8)
+      val built = bucketSpec("srch_fp")
       TextAnalysis.searchIndexForget(s, "srch_fp", "srch_fs",
-        docs.filter(col("doc_id") % 10 === 0).select("doc_id"),
-        buckets = 8)
+        docs.filter(col("doc_id") % 10 === 0).select("doc_id"))
+      assert(bucketSpec("srch_fp") == built && built.nonEmpty)
       TextAnalysis.searchWriteIndex(docs.filter(col("doc_id") % 10 =!= 0),
         "srch_rp", "srch_rs", buckets = 8)
       val got = TextAnalysis.bm25Indexed(s, terms, "srch_fp", "srch_fs",
@@ -211,8 +218,7 @@ class SearchIndexSpec extends SparkTestBase {
       // winnow: same round trip, row-for-row through the pair probe
       TextAnalysis.winnowWriteIndex(docs, "srch_fw", buckets = 8)
       TextAnalysis.winnowIndexForget(s, "srch_fw",
-        docs.filter(col("doc_id") % 10 === 0).select("doc_id"),
-        buckets = 8)
+        docs.filter(col("doc_id") % 10 === 0).select("doc_id"))
       TextAnalysis.winnowWriteIndex(docs.filter(col("doc_id") % 10 =!= 0),
         "srch_rw", buckets = 8)
       def rows(df: org.apache.spark.sql.DataFrame) =
@@ -242,7 +248,7 @@ class SearchIndexSpec extends SparkTestBase {
       TextAnalysis.searchWriteIndex(docs, "srch_ep", "srch_es",
         buckets = 2)
       TextAnalysis.searchIndexForget(s, "srch_ep", "srch_es",
-        docs.select("doc_id"), buckets = 2)
+        docs.select("doc_id"))
       val st = s.table("srch_es").collect().head
       assert(st.getLong(0) === 0L && !st.isNullAt(1) &&
         st.getLong(1) === 0L, "stats must read (0, 0), never (0, NULL)")
@@ -266,8 +272,7 @@ class SearchIndexSpec extends SparkTestBase {
     try {
       TextAnalysis.searchWriteIndex(mk(Seq(1L, 2L)), "srch_p2", "srch_s2",
         buckets = 2)
-      TextAnalysis.searchIndexAppend(s, mk(Seq(3L)), "srch_p2", "srch_s2",
-        buckets = 2)
+      TextAnalysis.searchIndexAppend(s, mk(Seq(3L)), "srch_p2", "srch_s2")
       val st = s.table("srch_s2").collect().head
       assert(st.getLong(0) == 3L && st.getLong(1) == 9L) // 3 docs × 3 toks
     } finally {

@@ -29,7 +29,7 @@ class StreamingMediaSpec extends SparkTestBase {
     val ingestIn = MemoryStream[Long]
     val ingest = StreamingMedia.ingestImages(
       payloadOf(ingestIn.toDF().toDF("doc_id")), table,
-      tmpDir("smedia_ing"), buckets = 4, Trigger.ProcessingTime(0))
+      tmpDir("smedia_ing"), Trigger.ProcessingTime(0))
     // batch 0 of ingest: 448 is a byte-identical copy of doc 0
     ingestIn.addData(448L)
     ingest.processAllAvailable()

@@ -1172,7 +1172,7 @@ class StreamingSpec extends SparkTestBase {
       val q = StreamingFunnel.curationAdmit(
         input.toDF().toDF("doc_id", "text", "lang", "source", "n_chars"),
         tbls(0), tbls(1), tbls(2), tbls(3), tmpDir("curation_admit"),
-        buckets = 4, trigger = Trigger.ProcessingTime(0)) { (res, bid) =>
+        trigger = Trigger.ProcessingTime(0)) { (res, bid) =>
         perBatch(bid) = res.collect().map(r => r.getString(1) ->
           ((r.getLong(2), r.getLong(3), r.getLong(4)))).toMap
         ()
