@@ -449,7 +449,7 @@ object Example {
         "cascade refusal counters):")
       Multimodal.videoIndexAudit(spark, "graft_example_vidx",
         Multimodal.synthVideoPayload(
-          docs.filter(col("doc_id") % 13 === 0)), buckets = 4).show()
+          docs.filter(col("doc_id") % 13 === 0))).show()
       println("[example] mixture epoch plan under a token budget " +
         "(4-epoch repeat cap), then the forfeit re-spent:")
       CorpusOps.mixPlan(docs, budgetTokens = 1L << 19)

@@ -1233,8 +1233,7 @@ object SparkEntry {
     // geometry, fp census, above-guard boilerplate mass, and the
     // probe-vs-inline pair-count parity sample (the bloomAudit treatment)
     "corpus_winnow_index_audit" -> ((s, dir) =>
-      TextAnalysis.winnowIndexAudit(s, winnowIndexedTable(s, dir),
-        buckets = 8)),
+      TextAnalysis.winnowIndexAudit(s, winnowIndexedTable(s, dir))),
     // DSIR-style importance weights: hashed-unigram log-ratio of the
     // lang='en' target slice vs the raw corpus, micro-integer summed
     "doc_dsir_weights" -> ((s, dir) =>
@@ -2358,7 +2357,7 @@ object SparkEntry {
       Multimodal.phashIndexAudit(s, phashIndexedTable(s, dir),
         Multimodal.synthBmpPayload(
           tNoFan(s, dir, "documents").filter(col("doc_id") % 13 === 0)),
-        buckets = 8, maxBandVals = 4)),
+        maxBandVals = 4)),
     // the video keyframe index gets the same serving audit: per-slot
     // census rows (the index bands per slot), global vote-gated serve
     // parity + cascade refusals repeated on each row (maxBandVals=4 is
@@ -2368,7 +2367,7 @@ object SparkEntry {
       Multimodal.videoIndexAudit(s, videoIndexedTable(s, dir),
         Multimodal.synthVideoPayload(
           t(s, dir, "documents").filter(col("doc_id") % 13 === 0)),
-        buckets = 8, maxBandVals = 4)),
+        maxBandVals = 4)),
     // video takedown off the persisted keyframe index: per-slot banded
     // value match + popcount + >=2-of-3 vote gate — "remove every
     // re-encode of this clip" with one box walk over the requests

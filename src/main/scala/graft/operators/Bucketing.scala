@@ -17,7 +17,10 @@ import org.apache.spark.sql.catalyst.catalog.CatalogTable
   * ([[writeBucketed]], [[writePlain]]) decides the layout once; after that
   * [[append]] and [[rewrite]] read the bucket columns, bucket count, sort
   * columns and `graft.*` properties from the catalogue, and every rewrite
-  * stages a sibling table and swaps it in by rename. */
+  * stages a sibling table and swaps it in by rename. The same holds for
+  * an index's other build parameters: the build records them
+  * ([[setTableParams]]) and every later reader takes them from the table
+  * ([[tableParam]]). */
 object Bucketing {
 
   /** Build `table`: persist `df` as a bucketed managed table, replacing any
@@ -130,15 +133,13 @@ object Bucketing {
 
   /** The bucket count of an existing catalog table, if it is bucketed. */
   def tableBuckets(spark: SparkSession, table: String): Option[Int] =
-    try metadata(spark, table).bucketSpec.map(_.numBuckets)
-    catch { case _: Throwable => None }
+    metadata(spark, table).bucketSpec.map(_.numBuckets)
 
-  /** Persist build parameters on a table as TBLPROPERTIES — the sidecar
-    * that lets probe-time entry points validate they were called with the
-    * SAME parameters the index was built with (a mismatched probe matches
-    * nothing and silently reads 'kept'/'novel' — a compliance false
-    * negative with no error; r16 advisor finding). Keys are namespaced
-    * `graft.*`. */
+  /** Record an index's build parameters on its table as `graft.*`
+    * TBLPROPERTIES — what the index was built with, decided once by its
+    * build function. [[append]] leaves them and [[rewrite]] carries them,
+    * and every later probe, append and audit reads them through
+    * [[tableParam]] instead of taking them from its caller. */
   def setTableParams(spark: SparkSession, table: String,
                      params: Map[String, String]): Unit = {
     val kvs = params.map { case (k, v) => s"'graft.$k'='$v'" }
@@ -146,26 +147,14 @@ object Bucketing {
     spark.sql(s"ALTER TABLE $table SET TBLPROPERTIES ($kvs)")
   }
 
-  /** Read back a `graft.*` table parameter written by [[setTableParams]];
-    * None for tables that predate the sidecar (legacy indexes validate
-    * nothing — the documented fallback). */
-  def getTableParam(spark: SparkSession, table: String,
-                    key: String): Option[String] =
-    try {
-      spark.sql(s"SHOW TBLPROPERTIES $table").collect()
-        .find(_.getString(0) == s"graft.$key").map(_.getString(1))
-    } catch { case _: Throwable => None }
-
-  /** Require that the caller's parameter matches the table's persisted
-    * build parameter, when one exists. */
-  def requireTableParam(spark: SparkSession, table: String, key: String,
-                        expected: String): Unit =
-    getTableParam(spark, table, key).foreach { v =>
-      require(v == expected,
-        s"$table was built with graft.$key=$v but probed with $expected " +
-          "— a parameter-mismatched probe matches nothing and would " +
-          "silently report every document as kept/novel")
-    }
+  /** The build parameter `key` recorded on `table` by
+    * [[setTableParams]]. A table without it was not built by `builtBy`,
+    * so nothing can be served off it: fail naming both. */
+  def tableParam(spark: SparkSession, table: String, key: String,
+                 builtBy: String): String =
+    metadata(spark, table).properties.getOrElse(s"graft.$key",
+      throw new IllegalArgumentException(s"$table carries no graft.$key" +
+        s" — build it with $builtBy first"))
 
   /** Join two bucketed tables on their bucket key. When both sides share the
     * same bucket count, the physical plan has NO Exchange under the join —

@@ -1120,58 +1120,58 @@ object CorpusOps {
   /** [[curationFunnelIncremental]] against PERSISTED corpus state — the
     * four relations [[funnelWriteState]] materializes once per corpus
     * version. Per-increment work is the increment's own signatures plus
-    * probes of stored relations; the corpus is not touched. Same
-    * parameters ⇒ identical rows to the inline variant (the chain is
-    * deterministic — the incrementalNearDedupIndexed contract). */
+    * probes of stored relations; the corpus is not touched. The banding
+    * and span width come from the state ([[Dedup.bandParams]],
+    * [[spanTokensOf]]), so the rows equal the inline variant under the
+    * build's parameters (the chain is deterministic — the
+    * incrementalNearDedupIndexed contract). */
   def curationFunnelIncrementalIndexed(
       spark: org.apache.spark.sql.SparkSession, newDocs: DataFrame,
       fpTable: String, bandsTable: String, setsTable: String,
       spanFpTable: String, fp: Column = md5(col("text")),
-      jaccardThreshold: Double = 0.8, minhashK: Int = 4,
-      rowsPerBand: Int = 2, spanTokens: Int = 8,
-      minNovelTokens: Long = 20, estimatedItems: Long = 1L << 16,
+      jaccardThreshold: Double = 0.8, minNovelTokens: Long = 20,
+      estimatedItems: Long = 1L << 16,
       numBits: Long = 1L << 19): DataFrame =
     globalAttrition(
       incrementalStagesIndexed(spark, newDocs, fpTable, bandsTable,
-        setsTable, spanFpTable, fp, jaccardThreshold, minhashK,
-        rowsPerBand, spanTokens, minNovelTokens, estimatedItems,
-        numBits),
+        setsTable, spanFpTable, fp, jaccardThreshold, minNovelTokens,
+        estimatedItems, numBits),
       IncrementalStageSpecs)
 
   /** The indexed stage frames against the CURRENT catalog state — the
     * tables are refresh(ed) first so a maintainer's appends from the
     * same session (the admission path) are visible, the
     * mediaTakedownStatus discipline. Every relation is filtered by the
-    * RTBF tombstone ledger when one exists ([[funnelStateForget]]): a
-    * retired holder's rows stop matching IMMEDIATELY, before the next
+    * RTBF tombstone ledger ([[funnelStateForget]]): a retired holder's
+    * rows stop matching IMMEDIATELY, before the next
     * [[funnelStateCompact]] physically removes them. The ledger is
     * cumulative-tombstone-sized (tiny vs the state), so the anti-joins
-    * broadcast it; the probe also validates its banding geometry against
-    * the index's build sidecar. A pre-r17 state (no ledger table, no
-    * doc_id column on fp/span) probes exactly as before. */
+    * broadcast it. */
   private[graft] def incrementalStagesIndexed(
       spark: org.apache.spark.sql.SparkSession, newDocs: DataFrame,
       fpTable: String, bandsTable: String, setsTable: String,
       spanFpTable: String, fp: Column, jaccardThreshold: Double,
-      minhashK: Int, rowsPerBand: Int, spanTokens: Int,
       minNovelTokens: Long, estimatedItems: Long,
       numBits: Long): Seq[DataFrame] = {
-    Seq(fpTable, bandsTable, setsTable, spanFpTable)
-      .foreach(spark.catalog.refreshTable)
-    Dedup.requireBandParams(spark, bandsTable, minhashK, rowsPerBand)
     val deadT = funnelDeadTable(fpTable)
-    val live: DataFrame => DataFrame =
-      if (!spark.catalog.tableExists(deadT)) identity
-      else {
-        spark.catalog.refreshTable(deadT)
-        val dead = broadcast(spark.table(deadT).distinct())
-        rel => rel.join(dead, Seq("doc_id"), "left_anti")
-      }
+    Seq(fpTable, bandsTable, setsTable, spanFpTable, deadT)
+      .foreach(spark.catalog.refreshTable)
+    val (minhashK, rowsPerBand) = Dedup.bandParams(spark, bandsTable)
+    val dead = broadcast(spark.table(deadT).distinct())
+    def live(rel: DataFrame) = rel.join(dead, Seq("doc_id"), "left_anti")
     incrementalStages(newDocs, live(spark.table(fpTable)),
       live(spark.table(bandsTable)), live(spark.table(setsTable)),
       live(spark.table(spanFpTable)), fp, jaccardThreshold, minhashK,
-      rowsPerBand, spanTokens, minNovelTokens, estimatedItems, numBits)
+      rowsPerBand, spanTokensOf(spark, spanFpTable), minNovelTokens,
+      estimatedItems, numBits)
   }
+
+  /** The span-window width recorded on a [[funnelWriteState]] span
+    * census — what every append and probe of the census windows with. */
+  private def spanTokensOf(spark: org.apache.spark.sql.SparkSession,
+                           spanFpTable: String): Int =
+    Bucketing.tableParam(spark, spanFpTable, "span_tokens",
+      "funnelWriteState").toInt
 
   /** ADMIT an increment into the funnel's persisted corpus state — the
     * maintenance half the serve contracts point at: one append per
@@ -1182,17 +1182,17 @@ object CorpusOps {
     * an at-least-once replay degrades cost, never correctness — but
     * admit each increment once; key deliveries by batchId (the
     * StreamingMedia ingest contract). The bands re-band with the
-    * geometry persisted on the band table ([[Dedup.nearDupIndexAppend]]). */
+    * geometry recorded on the band table ([[Dedup.nearDupIndexAppend]])
+    * and the span windows take the census's recorded width. */
   def funnelStateAppend(docs: DataFrame, fpTable: String,
                         bandsTable: String, setsTable: String,
                         spanFpTable: String,
-                        fp: Column = md5(col("text")),
-                        spanTokens: Int = 8): Unit = {
+                        fp: Column = md5(col("text"))): Unit = {
     Bucketing.append(docs.select(col("doc_id"), fp.as("fp")), fpTable)
     Dedup.nearDupIndexAppend(docs, bandsTable, setsTable)
     Bucketing.append(
-      Dedup.spanWindows(docs, spanTokens).select("doc_id", "fp")
-        .distinct(),
+      Dedup.spanWindows(docs, spanTokensOf(docs.sparkSession, spanFpTable))
+        .select("doc_id", "fp").distinct(),
       spanFpTable)
   }
 
@@ -1248,7 +1248,9 @@ object CorpusOps {
     * span relations carry doc_id (r17) so forget can retire a holder in
     * O(tombstones): the probe reads them as fp SETS (anti-join the
     * ledger, project fp), so the attribution column costs one long per
-    * row and changes no verdict. ONE signature pass over the corpus per
+    * row and changes no verdict. The banding ([[Dedup.nearDupWriteIndex]])
+    * and the span width are recorded on their tables; every append and
+    * probe reads them there. ONE signature pass over the corpus per
     * version, amortized over every increment — the ivfWriteIndex
     * discipline. EAGER: runs the write jobs at call time. */
   def funnelWriteState(docs: DataFrame, fpTable: String,
@@ -1265,6 +1267,8 @@ object CorpusOps {
       Dedup.spanWindows(docs, spanTokens).select("doc_id", "fp")
         .distinct(),
       spanFpTable, "fp", buckets)
+    Bucketing.setTableParams(docs.sparkSession, spanFpTable,
+      Map("span_tokens" -> spanTokens.toString))
     Bucketing.writePlain(docs.select("doc_id").limit(0),
       funnelDeadTable(fpTable))
   }
@@ -1302,18 +1306,13 @@ object CorpusOps {
                          fpTable: String, bandsTable: String,
                          setsTable: String, spanFpTable: String): Unit = {
     val deadT = funnelDeadTable(fpTable)
-    val hasLedger = spark.catalog.tableExists(deadT)
-    if (hasLedger) spark.catalog.refreshTable(deadT)
+    spark.catalog.refreshTable(deadT)
     Seq(fpTable, bandsTable, setsTable, spanFpTable).foreach { t =>
-      Bucketing.rewrite(spark, t) { rel =>
-        val live =
-          if (!hasLedger) rel
-          else rel.join(spark.table(deadT).distinct(), Seq("doc_id"),
-            "left_anti")
-        live.distinct()
-      }
+      Bucketing.rewrite(spark, t)(
+        _.join(spark.table(deadT).distinct(), Seq("doc_id"), "left_anti")
+          .distinct())
     }
-    if (hasLedger) Bucketing.rewrite(spark, deadT)(_.distinct())
+    Bucketing.rewrite(spark, deadT)(_.distinct())
   }
 
   /** The incremental funnel's stage frames — order-exact against the

@@ -424,39 +424,21 @@ object Dedup {
     Bucketing.writeBucketed(bandTable(minhash(docs, minhashK), rowsPerBand),
       bandsTable, "bucket", buckets)
     Bucketing.writeBucketed(shingleSets(docs), setsTable, "doc_id", buckets)
-    // Persist the banding geometry ON the index: a probe re-banding request
-    // content with DIFFERENT (minhashK, rowsPerBand) matches nothing and
-    // silently reads every near-copy as 'kept' — a compliance false
-    // negative with no error anywhere. Probe entry points require() a
-    // match against this sidecar (r16 advisor finding).
+    // The banding geometry lives ON the index: every probe and append
+    // re-bands with it ([[bandParams]]), so no caller can re-band with a
+    // geometry that matches nothing.
     Bucketing.setTableParams(docs.sparkSession, bandsTable, Map(
       "minhash_k" -> minhashK.toString,
       "rows_per_band" -> rowsPerBand.toString))
   }
 
-  /** Validate a probe's banding parameters against the persisted index's
-    * build sidecar ([[nearDupWriteIndex]]); legacy indexes without the
-    * sidecar validate nothing. Shared by every content-rebanding probe of
-    * a stored band table. */
-  private[graft] def requireBandParams(
-      spark: org.apache.spark.sql.SparkSession, bandsTable: String,
-      minhashK: Int, rowsPerBand: Int): Unit = {
-    Bucketing.requireTableParam(spark, bandsTable, "minhash_k",
-      minhashK.toString)
-    Bucketing.requireTableParam(spark, bandsTable, "rows_per_band",
-      rowsPerBand.toString)
-  }
-
-  /** The banding geometry (minhashK, rowsPerBand) persisted on a
-    * [[nearDupWriteIndex]] band table — what every append must re-band
-    * with. A table without the sidecar has no known geometry and fails
-    * loudly. */
-  private def bandParams(spark: org.apache.spark.sql.SparkSession,
-                         bandsTable: String): (Int, Int) = {
+  /** The banding geometry (minhashK, rowsPerBand) recorded on a
+    * [[nearDupWriteIndex]] band table — what every probe and append of
+    * the index re-bands with. */
+  private[graft] def bandParams(spark: org.apache.spark.sql.SparkSession,
+                                bandsTable: String): (Int, Int) = {
     def param(key: String): Int =
-      Bucketing.getTableParam(spark, bandsTable, key).getOrElse(
-        throw new IllegalArgumentException(s"$bandsTable carries no " +
-          s"graft.$key — build it with nearDupWriteIndex first")).toInt
+      Bucketing.tableParam(spark, bandsTable, key, "nearDupWriteIndex").toInt
     (param("minhash_k"), param("rows_per_band"))
   }
 
@@ -491,15 +473,16 @@ object Dedup {
   /** [[incrementalNearDedup]] against a PERSISTED index
     * ([[nearDupWriteIndex]] output) — query-time work is the increment's
     * own signature chain plus two joins against stored relations; the
-    * corpus is not touched. Same parameters ⇒ identical results to the
-    * inline variant (the chain is deterministic). */
+    * corpus is not touched. The increment is banded with the geometry
+    * the index was built with ([[bandParams]]), so the result equals the
+    * inline variant under the build's parameters (the chain is
+    * deterministic). */
   def incrementalNearDedupIndexed(spark: org.apache.spark.sql.SparkSession,
                                   newDocs: DataFrame, bandsTable: String,
                                   setsTable: String,
-                                  jaccardThreshold: Double = 0.8,
-                                  minhashK: Int = 4,
-                                  rowsPerBand: Int = 2): DataFrame = {
-    requireBandParams(spark, bandsTable, minhashK, rowsPerBand)
+                                  jaccardThreshold: Double = 0.8)
+      : DataFrame = {
+    val (minhashK, rowsPerBand) = bandParams(spark, bandsTable)
     nearDedupProbe(newDocs, spark.table(bandsTable), spark.table(setsTable),
       jaccardThreshold, minhashK, rowsPerBand)
   }
@@ -1439,7 +1422,7 @@ object Dedup {
     * co-located after the append — [[Bucketing.append]] takes the layout
     * from the catalogue). The batch is banded with the geometry persisted
     * on the band table ([[bandParams]]), so appended docs band exactly as
-    * the probes that validate against that sidecar expect. This is the
+    * the probes, which read the same geometry, expect. This is the
     * corpus-version upgrade path at 100 TB: one signature pass over the
     * INCREMENT instead of re-signing the whole corpus, after which future
     * increments probe a corpus+batch index. Typical cycle: probe batch →
@@ -1747,19 +1730,17 @@ object Dedup {
     * request-sized and ride broadcasts; the corpus side is two probes of
     * the stored [[nearDupWriteIndex]] relations plus one column-pruned
     * (doc_id, source, md5(text)) scan for the exact leg and the status
-    * projection — no corpus re-shingling, ever. */
+    * projection — no corpus re-shingling, ever. Request content is
+    * re-banded with the geometry the index was built with
+    * ([[bandParams]]). */
   def takedownStatusContent(spark: org.apache.spark.sql.SparkSession,
                             docs: DataFrame, requests: DataFrame,
                             bandsTable: String, setsTable: String,
-                            jaccardThreshold: Double = 0.8,
-                            minhashK: Int = 4,
-                            rowsPerBand: Int = 2): DataFrame = {
+                            jaccardThreshold: Double = 0.8): DataFrame = {
     // an online maintainer may have appended since this session last read
     // the tables (the mediaTakedownStatus discipline)
     Seq(bandsTable, setsTable).foreach(spark.catalog.refreshTable)
-    // request content is RE-banded here — mismatched geometry vs the
-    // index's build would silently report every near-copy as 'kept'
-    requireBandParams(spark, bandsTable, minhashK, rowsPerBand)
+    val (minhashK, rowsPerBand) = bandParams(spark, bandsTable)
     val req = requests.select(col("req_id").as("doc_id"), col("text"))
       .localCheckpoint(eager = false) // request signatures computed once
     val bReq = bandTable(minhash(req, minhashK), rowsPerBand)

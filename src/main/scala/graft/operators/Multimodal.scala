@@ -1321,8 +1321,8 @@ object Multimodal {
 
   /** One-row AUDIT of the persisted perceptual index — the serving-
     * layer treatment the winnow index and bloom export get: geometry
-    * (bucket count), volume (assets, distinct sketches), the COPY
-    * census takedown work scales with (max copies of one sketch, the
+    * (the catalogue's bucket count), volume (assets, distinct sketches),
+    * the COPY census takedown work scales with (max copies of one sketch, the
     * asset share holding a duplicated sketch — a spiking dup share
     * means the ingest dedup upstream stopped doing its job), and a
     * serve parity sample: the match count for the caller's request
@@ -1334,7 +1334,6 @@ object Multimodal {
     * the serve probe, three 1-row frames crossJoin-broadcast. */
   def phashIndexAudit(spark: org.apache.spark.sql.SparkSession,
                       table: String, requests: DataFrame,
-                      buckets: Int = 16,
                       maxBandVals: Int = 2048): DataFrame = {
     spark.catalog.refreshTable(table)
     val idx = spark.table(table)
@@ -1356,7 +1355,9 @@ object Multimodal {
       maxBandVals)
     volume.crossJoin(broadcast(sketchStats)).crossJoin(broadcast(parity))
       .crossJoin(broadcast(refusals))
-      .select(lit(buckets).cast("long").as("n_buckets"),
+      .select(
+        lit(Bucketing.tableBuckets(spark, table).getOrElse(0)).cast("long")
+          .as("n_buckets"),
         col("n_assets"), col("n_distinct_sketches"), col("max_copies"),
         col("dup_assets"),
         expr("(10000 * dup_assets) DIV n_assets").as("dup_share_e4"),
@@ -1598,10 +1599,10 @@ object Multimodal {
     * [[phashIndexAudit]] treatment at video semantics: one row PER
     * TIMELINE SLOT (the index's banding group — a slot-0 copy census
     * says nothing about slot 2) with the slot's asset/sketch/copy
-    * census, plus the global columns repeated on every row: bucket
-    * geometry, the vote-gated serve-parity match count for the
-    * caller's request slice ([[videoTakedownStatus]], inherently
-    * cross-slot), and the cascade refusal pair counted over the
+    * census, plus the global columns repeated on every row: the
+    * catalogue's bucket geometry, the vote-gated serve-parity match
+    * count for the caller's request slice ([[videoTakedownStatus]],
+    * inherently cross-slot), and the cascade refusal pair counted over the
     * PER-SLOT value universes (the same grouping [[videoDupPairs]]
     * bands with — the no-silent-caps columns). Every column
     * integer-exact.
@@ -1611,7 +1612,6 @@ object Multimodal {
     * census; globals ride broadcast crossJoins onto the ≤3 slot rows. */
   def videoIndexAudit(spark: org.apache.spark.sql.SparkSession,
                       table: String, requests: DataFrame,
-                      buckets: Int = 16,
                       maxBandVals: Int = 2048): DataFrame = {
     spark.catalog.refreshTable(table)
     val idx = spark.table(table)
@@ -1630,7 +1630,8 @@ object Multimodal {
       maxBandVals)
     perSlot.crossJoin(broadcast(parity)).crossJoin(broadcast(refusals))
       .select(col("slot").cast("long").as("slot"),
-        lit(buckets).cast("long").as("n_buckets"),
+        lit(Bucketing.tableBuckets(spark, table).getOrElse(0)).cast("long")
+          .as("n_buckets"),
         col("n_assets"), col("n_distinct_sketches"), col("max_copies"),
         col("dup_assets"),
         expr("(10000 * dup_assets) DIV n_assets").as("dup_share_e4"),

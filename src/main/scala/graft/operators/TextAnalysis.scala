@@ -2189,20 +2189,28 @@ object TextAnalysis {
     * match-detection probe joins on fp INSIDE the bucket layout: the
     * census aggregate and both self-join sides of [[winnowPairsIndexed]]
     * read co-located buckets with no exchange on the corpus-sized
-    * relation at all. */
+    * relation at all. The gram and window are recorded on the table;
+    * [[winnowIndexAppend]] selects with them. */
   def winnowWriteIndex(docs: DataFrame, table: String, gram: Int = 8,
-                       window: Int = 4, buckets: Int = 32): Unit =
+                       window: Int = 4, buckets: Int = 32): Unit = {
     Bucketing.writeBucketed(winnowingSelected(docs, gram, window), table,
       "fp", buckets)
+    Bucketing.setTableParams(docs.sparkSession, table,
+      Map("gram" -> gram.toString, "window" -> window.toString))
+  }
 
   /** Index MAINTENANCE: append a batch's selected fingerprints, bucket
-    * layout preserved — O(batch), never a corpus rewrite; a
-    * same-parameters probe afterwards equals a full rebuild (the
-    * selection is per-doc deterministic; driver-gated via
-    * doc_winnow_pairs_appended's shared oracle). */
-  def winnowIndexAppend(newDocs: DataFrame, table: String, gram: Int = 8,
-                        window: Int = 4): Unit =
-    Bucketing.append(winnowingSelected(newDocs, gram, window), table)
+    * layout preserved — O(batch), never a corpus rewrite. The batch is
+    * selected with the gram and window the index was built with, so a
+    * probe afterwards equals a full rebuild (the selection is per-doc
+    * deterministic; driver-gated via doc_winnow_pairs_appended's shared
+    * oracle). */
+  def winnowIndexAppend(newDocs: DataFrame, table: String): Unit = {
+    def param(key: String): Int = Bucketing.tableParam(
+      newDocs.sparkSession, table, key, "winnowWriteIndex").toInt
+    Bucketing.append(
+      winnowingSelected(newDocs, param("gram"), param("window")), table)
+  }
 
   /** FORGET — remove documents from the persisted winnow index (the
     * [[graft.operators.Multimodal.mediaIndexForget]] step at fingerprint
@@ -2227,7 +2235,7 @@ object TextAnalysis {
 
   /** One-row AUDIT of the persisted winnow index — the portability
     * treatment the bloom export got ([[Dedup.bloomAudit]]): geometry
-    * (bucket count), volume (docs, selected rows, distinct
+    * (the catalogue's bucket count), volume (docs, selected rows, distinct
     * fingerprints), the hot-fingerprint census the `maxFpDocs` guard
     * acts on (max bucket, count and row share of above-guard
     * fingerprints — the boilerplate mass pair probes will EXCLUDE), and
@@ -2240,8 +2248,7 @@ object TextAnalysis {
     * the same layout, three 1-row frames crossJoin-broadcast. */
   def winnowIndexAudit(spark: org.apache.spark.sql.SparkSession,
                        table: String, minShared: Int = 3,
-                       maxFpDocs: Int = 10, buckets: Int = 32)
-      : DataFrame = {
+                       maxFpDocs: Int = 10): DataFrame = {
     val sel = spark.table(table)
     val byFp = sel.groupBy("fp").agg(count(lit(1)).as("n_docs_fp"))
       .localCheckpoint(eager = false) // feeds all four census aggregates
@@ -2257,7 +2264,8 @@ object TextAnalysis {
     val pairs = winnowPairsOn(sel, minShared, maxFpDocs)
       .agg(count(lit(1)).as("n_pairs_probe"))
     volume.crossJoin(broadcast(fpStats)).crossJoin(broadcast(pairs))
-      .select(lit(buckets).as("n_buckets"), col("n_docs"),
+      .select(lit(Bucketing.tableBuckets(spark, table).getOrElse(0))
+          .as("n_buckets"), col("n_docs"),
         col("n_rows"), col("n_distinct_fp"), col("max_fp_docs"),
         col("n_hot_fp"),
         expr("(10000 * hot_rows) DIV n_rows").as("hot_row_share_e4"),

@@ -146,8 +146,7 @@ object StreamingFunnel {
                     setsTable: String, spanFpTable: String,
                     checkpointDir: String,
                     fp: Column = md5(col("text")),
-                    jaccardThreshold: Double = 0.8, minhashK: Int = 4,
-                    rowsPerBand: Int = 2, spanTokens: Int = 8,
+                    jaccardThreshold: Double = 0.8,
                     minNovelTokens: Long = 20,
                     estimatedItems: Long = 1L << 16,
                     numBits: Long = 1L << 19,
@@ -156,13 +155,12 @@ object StreamingFunnel {
     MicroBatch.start(docs, checkpointDir, trigger) { (batch, batchId) =>
       val st = CorpusOps.incrementalStagesIndexed(batch.sparkSession,
         batch, fpTable, bandsTable, setsTable, spanFpTable, fp,
-        jaccardThreshold, minhashK, rowsPerBand, spanTokens,
-        minNovelTokens, estimatedItems, numBits)
+        jaccardThreshold, minNovelTokens, estimatedItems, numBits)
       val survivors = st.last.localCheckpoint() // eager — see scaladoc
       deliver(CorpusOps.globalAttrition(st.init :+ survivors,
         CorpusOps.IncrementalStageSpecs), batchId)
       CorpusOps.funnelStateAppend(survivors, fpTable, bandsTable,
-        setsTable, spanFpTable, fp, spanTokens)
+        setsTable, spanFpTable, fp)
     }
 
   /** CURATION funnel served ONLINE — the live form of
@@ -175,7 +173,9 @@ object StreamingFunnel {
     * never rescanned), and `deliver` receives the batch's 4-row
     * order-exact attrition frame plus the batch id — row-identical to
     * the batch operator on the same increment and state (spec-proven in
-    * StreamingSpec, the [[StreamingTakedown.serve]] parity pattern).
+    * StreamingSpec, the [[StreamingTakedown.serve]] parity pattern). The
+    * banding and span width are the state's own, recorded by
+    * [[CorpusOps.funnelWriteState]].
     *
     * `foreachBatch` for the StreamingTakedown reasons: the stages are
     * joins against CATALOG tables plus candidate-bounded scoring —
@@ -195,8 +195,7 @@ object StreamingFunnel {
                     setsTable: String, spanFpTable: String,
                     checkpointDir: String,
                     fp: Column = md5(col("text")),
-                    jaccardThreshold: Double = 0.8, minhashK: Int = 4,
-                    rowsPerBand: Int = 2, spanTokens: Int = 8,
+                    jaccardThreshold: Double = 0.8,
                     minNovelTokens: Long = 20,
                     estimatedItems: Long = 1L << 16,
                     numBits: Long = 1L << 19,
@@ -205,7 +204,7 @@ object StreamingFunnel {
     MicroBatch.start(docs, checkpointDir, trigger) { (batch, batchId) =>
       deliver(CorpusOps.curationFunnelIncrementalIndexed(
         batch.sparkSession, batch, fpTable, bandsTable, setsTable,
-        spanFpTable, fp, jaccardThreshold, minhashK, rowsPerBand,
-        spanTokens, minNovelTokens, estimatedItems, numBits), batchId)
+        spanFpTable, fp, jaccardThreshold, minNovelTokens, estimatedItems,
+        numBits), batchId)
     }
 }

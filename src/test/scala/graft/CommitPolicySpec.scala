@@ -12,7 +12,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * that a replayed batch would duplicate. Keeps the writer start single
   * too: `MicroBatch` is the one `foreachBatch` call and the one batch
   * interval. And keeps the index-table change single: `Bucketing` is the
-  * one place that drops, renames, saves or buckets a catalogue table. */
+  * one place that drops, renames, saves or buckets a catalogue table; and
+  * an index's build parameters are read off the index, never passed to
+  * its probes, appends and audits. */
 class CommitPolicySpec extends AnyFunSuite {
 
   test("no writer under graft/sinks or graft/streaming renames, appends " +
@@ -68,6 +70,44 @@ class CommitPolicySpec extends AnyFunSuite {
         comment.replaceAllIn(Files.readString(p), "")).isDefined)
     assert(offenders.isEmpty, "change an index table through " +
       "Bucketing.writeBucketed/writePlain/append/rewrite: " +
+      offenders.mkString(", "))
+  }
+
+  test("no probe, append or audit of a persisted index under " +
+    "graft/operators or graft/streaming takes a build parameter") {
+    val comment = """(?s)/\*.*?\*/|//[^\n]*""".r
+    val reader = ("""\bdef\s+(\w*(?:Indexed|IndexAppend|IndexAudit|""" +
+      """StateAppend)|takedownStatusContent|curationAdmit|curationServe)""" +
+      """\b""").r
+    val built =
+      """\b(minhashK|rowsPerBand|spanTokens|gram|window|buckets)\s*:""".r
+    // the def's type and value parameter lists, brackets balanced
+    def params(src: String, from: Int): String = {
+      var i = from
+      var depth = 0
+      while (i < src.length &&
+          (depth > 0 || "([".contains(src(i)) || src(i).isWhitespace)) {
+        if ("([".contains(src(i))) depth += 1
+        if (")]".contains(src(i))) depth -= 1
+        i += 1
+      }
+      src.substring(from, i)
+    }
+    val files = Seq("operators", "streaming").flatMap { d =>
+      val walk = Files.walk(Paths.get(s"src/main/scala/graft/$d"))
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally walk.close()
+    }
+    val offenders = files.flatMap { p =>
+      val src = comment.replaceAllIn(Files.readString(p), "")
+      reader.findAllMatchIn(src).flatMap { m =>
+        built.findAllMatchIn(params(src, m.end)).map(b =>
+          s"${p.getFileName}: ${m.group(1)}(${b.group(1)})")
+      }
+    }
+    assert(files.exists(_.getFileName.toString == "Dedup.scala"))
+    assert(offenders.isEmpty, "read build parameters off the index " +
+      "(Bucketing.tableParam, Bucketing.tableBuckets): " +
       offenders.mkString(", "))
   }
 }

@@ -163,6 +163,9 @@ class MultimodalValueBandSpec extends SparkTestBase {
     assert(got === brute, "banded serve must equal brute popcount")
     assert(brute.exists { case (q, c, h) => q == c && h == 0 },
       "a library request matches itself at hamming 0")
+    assert(Multimodal.phashIndexAudit(s, "graft_test_phidx", requests)
+      .select("n_buckets").head().getLong(0) === 4L,
+      "the audit reports the catalogue's bucket count")
     // append ≡ rebuild: build on evens, append odds, same answers
     Multimodal.phashWriteIndex(
       Multimodal.synthBmpPayload(docs.filter(col("doc_id") % 2 === 0)),

@@ -1296,7 +1296,7 @@ class NorthStarSpec extends SparkTestBase {
       val probe = docsDf(Seq(
         21L -> "brand new second corpus version text arriving later"))
       assert(Dedup.incrementalNearDedupIndexed(s, probe, "test_ndg_bands",
-        "test_ndg_sets", minhashK = 8, rowsPerBand = 4).count() === 0L,
+        "test_ndg_sets").count() === 0L,
         "the identical-text request must drop against the appended doc")
     } finally Seq("test_ndg_bands", "test_ndg_sets")
       .foreach(t => s.sql(s"DROP TABLE IF EXISTS $t"))
@@ -1343,35 +1343,33 @@ class NorthStarSpec extends SparkTestBase {
     Dedup.nearDupWriteIndex(docs, "test_bp_bands", "test_bp_sets",
       minhashK = 4, rowsPerBand = 2, buckets = 2)
     try {
-      assert(Bucketing.getTableParam(s, "test_bp_bands", "minhash_k")
-        === Some("4"))
-      assert(Bucketing.getTableParam(s, "test_bp_bands", "rows_per_band")
-        === Some("2"))
-      // mismatched geometry on a content probe: loud, not silent
-      val req = docsDf(Seq(99L -> dupText))
-        .select(col("doc_id").as("req_id"), col("text"))
+      assert(Bucketing.tableParam(s, "test_bp_bands", "minhash_k",
+        "nearDupWriteIndex") === "4")
+      assert(Bucketing.tableParam(s, "test_bp_bands", "rows_per_band",
+        "nearDupWriteIndex") === "2")
+      // the same band rows without the recorded geometry: the probe has
+      // nothing to re-band with and fails loudly, not silently
+      Bucketing.writeBucketed(s.table("test_bp_bands"), "test_bp_bare",
+        "bucket", buckets = 2)
       val e = intercept[IllegalArgumentException] {
-        Dedup.takedownStatusContent(s, docs, req, "test_bp_bands",
-          "test_bp_sets", minhashK = 8, rowsPerBand = 2).collect()
+        Dedup.incrementalNearDedupIndexed(s, docsDf(Seq(50L -> dupText)),
+          "test_bp_bare", "test_bp_sets").collect()
       }
       assert(e.getMessage.contains("minhash_k"))
-      intercept[IllegalArgumentException] {
-        Dedup.incrementalNearDedupIndexed(s, docsDf(Seq(50L -> dupText)),
-          "test_bp_bands", "test_bp_sets", rowsPerBand = 4).collect()
-      }
       // in-place forget rewrite: sidecar carried, catalog bucket count
       // wins over a WRONG caller parameter
       Dedup.nearDupIndexForget(s, "test_bp_bands", "test_bp_sets",
         docsDf(Seq(1L -> "x")).select("doc_id"))
-      assert(Bucketing.getTableParam(s, "test_bp_bands", "minhash_k")
-        === Some("4"), "the params sidecar must survive the rewrite")
+      assert(Bucketing.tableParam(s, "test_bp_bands", "minhash_k",
+        "nearDupWriteIndex") === "4",
+        "the params sidecar must survive the rewrite")
       assert(Bucketing.tableBuckets(s, "test_bp_bands") === Some(2),
         "the rewrite must keep the catalog layout, not the caller's 16")
       // and the matched-params probe still works end-to-end post-rewrite
       assert(Dedup.incrementalNearDedupIndexed(s,
         docsDf(Seq(51L -> dupText)), "test_bp_bands", "test_bp_sets")
         .count() === 1L, "doc 1 forgotten: its dup re-enters")
-    } finally Seq("test_bp_bands", "test_bp_sets")
+    } finally Seq("test_bp_bands", "test_bp_sets", "test_bp_bare")
       .foreach(t => s.sql(s"DROP TABLE IF EXISTS $t"))
   }
 

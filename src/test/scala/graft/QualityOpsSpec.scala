@@ -1055,7 +1055,8 @@ class QualityOpsSpec extends SparkTestBase {
     // incrementalNearDedupIndexed determinism contract)
     val tbls = Seq("graft_test_fun_fps", "graft_test_fun_bands",
       "graft_test_fun_sets", "graft_test_fun_spans")
-    val tblsAll = tbls :+ (tbls(0) + "_dead")
+    val tbls6 = tbls.map(_ + "6")
+    val tblsAll = Seq(tbls, tbls6).flatMap(t => t :+ (t(0) + "_dead"))
     tblsAll.foreach(t => s.sql(s"DROP TABLE IF EXISTS $t"))
     try {
       CorpusOps.funnelWriteState(corpus, tbls(0), tbls(1), tbls(2),
@@ -1063,6 +1064,25 @@ class QualityOpsSpec extends SparkTestBase {
       val idx = CorpusOps.curationFunnelIncrementalIndexed(s, batch,
         tbls(0), tbls(1), tbls(2), tbls(3))
       assert(rows(idx) === got, "indexed state ≡ inline corpus")
+      // a 6-token census keeps its width: the span source 104 enters by
+      // a default-form append, and doc 8 copies a 7-token run of it
+      // (21 tokens, 14 novel once scrubbed) — dropped at width 6, never
+      // seen at the default 8
+      val batch8 = batch.unionByName(
+        df(Seq((8L, tx(sToks.slice(22, 29) ++
+          (1 to 12).map(i => f"newer$i%02d"))))))
+      val inline6 = rows(CorpusOps.curationFunnelIncremental(batch8,
+        corpus, spanTokens = 6))
+      assert(inline6.last._4 === 2L,
+        "width 6 scrubs both doc 5 and doc 8")
+      CorpusOps.funnelWriteState(corpus.filter(col("doc_id") =!= 104L),
+        tbls6(0), tbls6(1), tbls6(2), tbls6(3), spanTokens = 6,
+        buckets = 4)
+      CorpusOps.funnelStateAppend(corpus.filter(col("doc_id") === 104L),
+        tbls6(0), tbls6(1), tbls6(2), tbls6(3))
+      assert(rows(CorpusOps.curationFunnelIncrementalIndexed(s, batch8,
+        tbls6(0), tbls6(1), tbls6(2), tbls6(3))) === inline6,
+        "the census's width serves append and probe")
     } finally tblsAll.foreach(t => s.sql(s"DROP TABLE IF EXISTS $t"))
   }
 

@@ -166,6 +166,14 @@ class SearchIndexSpec extends SparkTestBase {
         "srch_wna", buckets = 8)
       TextAnalysis.winnowIndexAppend(docs.filter(col("doc_id") % 10 === 0),
         "srch_wna")
+      // a non-default build: the append selects with the index's own
+      // gram/window, not the defaults
+      TextAnalysis.winnowWriteIndex(docs, "srch_wn5", gram = 5, window = 3,
+        buckets = 8)
+      TextAnalysis.winnowWriteIndex(docs.filter(col("doc_id") % 10 =!= 0),
+        "srch_wna5", gram = 5, window = 3, buckets = 8)
+      TextAnalysis.winnowIndexAppend(docs.filter(col("doc_id") % 10 === 0),
+        "srch_wna5")
       def rows(df: org.apache.spark.sql.DataFrame) =
         df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
           .sorted.toSeq
@@ -175,6 +183,12 @@ class SearchIndexSpec extends SparkTestBase {
       assert(rows(probe) == inline)
       assert(rows(TextAnalysis.winnowPairsIndexed(s, "srch_wna"))
         == inline, "append must equal rebuild")
+      assert(rows(TextAnalysis.winnowPairsIndexed(s, "srch_wna5"))
+        == rows(TextAnalysis.winnowPairsIndexed(s, "srch_wn5")),
+        "an append onto a gram=5/window=3 build must equal that build")
+      assert(TextAnalysis.winnowIndexAudit(s, "srch_wn")
+        .select("n_buckets").head().getInt(0) === 8,
+        "the audit reports the catalogue's bucket count")
       // the fp-keyed census and self-join reuse the bucket layout: the
       // executed plan carries NO hash exchange on fp (only the final
       // (doc_a, doc_b) aggregate may shuffle)
@@ -186,7 +200,7 @@ class SearchIndexSpec extends SparkTestBase {
       assert(fpExchanges.isEmpty,
         s"indexed winnow probe shuffles on fp:\n$plan")
     } finally {
-      Seq("srch_wn", "srch_wna")
+      Seq("srch_wn", "srch_wna", "srch_wn5", "srch_wna5")
         .foreach(t => s.sql(s"DROP TABLE IF EXISTS $t"))
     }
   }
