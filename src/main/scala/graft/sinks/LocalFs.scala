@@ -1,10 +1,14 @@
 package graft.sinks
 
+import java.io.File
+import java.net.URI
 import java.nio.file.Files
 import java.nio.file.attribute.PosixFilePermission
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus,
+  FsConstants, FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.local.LocalConfigKeys
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.mapreduce.Job
 import org.apache.spark.sql.SparkSession
@@ -22,6 +26,8 @@ import org.apache.spark.sql.types.StructType
   * of every trigger.
   * [[ForkFreeLocalFileSystem]] sets the same umask-applied mode bits with
   * `java.nio`, so files, `.crc` sidecars and modes on disk stay as they are.
+  * Streaming checkpoints open their files through a `FileContext`, not a
+  * `FileSystem`; [[ForkFreeLocalFs]] is the same FileSystem behind that API.
   * Other schemes (`hdfs://`, object stores) are untouched.
   */
 object LocalFs {
@@ -35,6 +41,17 @@ object LocalFs {
     conf.setBoolean("fs.file.impl.disable.cache", true)
     conf
   }
+
+  /** Resolve the `FileContext` of `file:` paths to [[ForkFreeLocalFs]] for
+    * the queries started on `spark` from now on. Spark copies the session
+    * conf into the Hadoop conf it builds for a query
+    * (`SessionState.newHadoopConf`), and the offset and commit logs, the
+    * `metadata` file, the file sink's `_spark_metadata` and the state
+    * stores all write through a `FileContext` on it. An `AbstractFileSystem`
+    * is built per `FileContext`, never cached. */
+  def installCheckpoints(spark: SparkSession): Unit =
+    spark.conf.set("fs.AbstractFileSystem.file.impl",
+      classOf[ForkFreeLocalFs].getName)
 
   /** `format(...)` name of the text format whose writes use it. */
   val TextFormat: String = classOf[ForkFreeTextFileFormat].getName
@@ -65,12 +82,42 @@ class ForkFreeRawLocalFileSystem extends RawLocalFileSystem {
     }
     s
   }
+
+  /** Stock Hadoop forks `readlink` on `new File(p.toString)` — about eight
+    * times per atomic checkpoint write, from every `FileContext.rename` —
+    * and, when it prints nothing, returns `getFileStatus(p)`. A path that
+    * `java.nio` finds no symlink at gets that answer without the fork;
+    * symlinks, dangling ones included, take the stock path. */
+  override def getFileLinkStatus(p: Path): FileStatus =
+    if (Files.isSymbolicLink(new File(p.toString).toPath))
+      super.getFileLinkStatus(p)
+    else getFileStatus(p)
 }
 
 /** The checksummed local FileSystem over [[ForkFreeRawLocalFileSystem]]:
   * `.crc` sidecars and file bytes as `LocalFileSystem` writes them. */
 class ForkFreeLocalFileSystem
     extends LocalFileSystem(new ForkFreeRawLocalFileSystem)
+
+/** Hadoop's `RawLocalFs` (the `AbstractFileSystem` for `file:`) over
+  * [[ForkFreeRawLocalFileSystem]]: the stock class builds its own
+  * `RawLocalFileSystem`, so it is restated here with its overrides. */
+class ForkFreeRawLocalFs(uri: URI, conf: Configuration)
+    extends DelegateToFileSystem(uri, new ForkFreeRawLocalFileSystem, conf,
+      FsConstants.LOCAL_FS_URI.getScheme, false) {
+  override def getUriDefaultPort: Int = -1
+  override def getServerDefaults(f: Path): FsServerDefaults =
+    LocalConfigKeys.getServerDefaults
+  override def getServerDefaults(): FsServerDefaults =
+    LocalConfigKeys.getServerDefaults
+  override def isValidName(src: String): Boolean = true
+}
+
+/** Hadoop's `LocalFs` over [[ForkFreeRawLocalFs]]: the `.crc` sidecars of
+  * the stock checksummed `file:` `AbstractFileSystem`, which also ignores
+  * the URI it is built for. */
+class ForkFreeLocalFs(uri: URI, conf: Configuration)
+    extends ChecksumFs(new ForkFreeRawLocalFs(FsConstants.LOCAL_FS_URI, conf))
 
 /** Spark's text format with [[LocalFs.install]] applied to the write job's
   * Hadoop conf. `FileFormatWriter` calls `prepareWrite` before it ships the

@@ -21,7 +21,7 @@ import graft.sinks.{BatchCommit, FtpLikeSink, LocalFs}
   *    bug, SURVEY §2.9.5) → `dt` derived from data/batch event time;
   *  - `concurrentJobs` job overlap → independent streaming queries;
   *  - checkpoint + `getOrCreate` driver recovery (at-least-once) →
-  *    `checkpointLocation` (exactly-once source offsets);
+  *    a checkpoint (exactly-once source offsets, [[MicroBatch.writer]]);
   *  - 200 s window re-archive duplication (SURVEY §2.9.6) → tumbling window
   *    aggregation with a watermark: each record counted exactly once.
   */
@@ -56,15 +56,12 @@ object CdrStreaming {
     // maxRecordsPerFile = the reference's size-based flush granularity
     // (`cache` records per file append, src/ProcessSums.scala:286-311) —
     // bounds file sizes without its repartition(1) single-writer bottleneck.
-    routed
-      .select("value", "dt", "record_type")
-      .writeStream
+    MicroBatch.writer(routed.select("value", "dt", "record_type"),
+        checkpointDir, trigger)
       .format(LocalFs.TextFormat)
       .partitionBy("dt", "record_type")
       .option("path", outDir)
       .option("maxRecordsPerFile", maxRecordsPerFile.toString)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
       .start()
   }
 
@@ -165,14 +162,11 @@ object CdrStreaming {
                     checkpointDir: String,
                     trigger: Trigger = MicroBatch.Interval,
                     maxRecordsPerFile: Int = 100000): StreamingQuery =
-    fileValue
-      .writeStream
+    MicroBatch.writer(fileValue, checkpointDir, trigger)
       .format(LocalFs.TextFormat)
       .partitionBy("file")
       .option("path", outDir)
       .option("maxRecordsPerFile", maxRecordsPerFile.toString)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
       .start()
 
   /** Tumbling-window per-type counts with a watermark (the correct-once

@@ -10,9 +10,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * path that makes a sink's or a streaming maintainer's output visible, so
   * no writer can drift back to its own tmp+rename, marker file or append
   * that a replayed batch would duplicate. Keeps the writer start single
-  * too: `MicroBatch` is the one `foreachBatch` call and the one batch
-  * interval. And keeps the index-table change single: `Bucketing` is the
-  * one place that drops, renames, saves or buckets a catalogue table; and
+  * too: `MicroBatch` is the one `foreachBatch` call, the one batch
+  * interval and the one `checkpointLocation`, so every query's checkpoint
+  * goes through the fork-free local FileSystem. And keeps the index-table
+  * change single: `Bucketing` is the one place that drops, renames, saves
+  * or buckets a catalogue table; and
   * an index's build parameters are read off the index, never passed to
   * its probes, appends and audits. */
 class CommitPolicySpec extends AnyFunSuite {
@@ -109,5 +111,22 @@ class CommitPolicySpec extends AnyFunSuite {
     assert(offenders.isEmpty, "read build parameters off the index " +
       "(Bucketing.tableParam, Bucketing.tableBuckets): " +
       offenders.mkString(", "))
+  }
+
+  test("no query under graft/sinks or graft/streaming sets its " +
+    "checkpointLocation outside MicroBatch") {
+    val comment = """(?s)/\*.*?\*/|//[^\n]*""".r
+    val files = Seq("sinks", "streaming").flatMap { d =>
+      val walk = Files.walk(Paths.get(s"src/main/scala/graft/$d"))
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally walk.close()
+    }
+    assert(files.exists(_.getFileName.toString == "MicroBatch.scala"))
+    val offenders = files
+      .filter(_.getFileName.toString != "MicroBatch.scala")
+      .filter(p => comment.replaceAllIn(Files.readString(p), "")
+        .contains("checkpointLocation"))
+    assert(offenders.isEmpty, "checkpoint a query through " +
+      "MicroBatch.writer: " + offenders.mkString(", "))
   }
 }

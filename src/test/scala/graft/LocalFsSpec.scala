@@ -1,18 +1,26 @@
 package graft
 
+import java.io.FileNotFoundException
 import java.net.URI
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+import scala.util.Try
+
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, Path}
+import org.apache.hadoop.fs.{AbstractFileSystem, FileSystem, LocalFileSystem,
+  Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sinks.{ForkFreeLocalFileSystem, ForkFreeRawLocalFileSystem,
-  LocalFs}
+import graft.sinks.{ForkFreeLocalFileSystem, ForkFreeLocalFs,
+  ForkFreeRawLocalFileSystem, LocalFs}
 
 /** The fork-free local FileSystem leaves the same modes, bytes and `.crc`
-  * sidecars on disk as Hadoop's stock `LocalFileSystem`. */
+  * sidecars on disk as Hadoop's stock `LocalFileSystem`, through the
+  * `FileSystem` API and through the `FileContext` API that streaming
+  * checkpoints write with. */
 class LocalFsSpec extends AnyFunSuite {
 
   private def conf(umask: String): Configuration = {
@@ -110,5 +118,77 @@ class LocalFsSpec extends AnyFunSuite {
       .isInstanceOf[ForkFreeRawLocalFileSystem])
     // the cache still serves the stock instance to a conf without it
     assert(uri.getFileSystem(new Configuration()) eq cached)
+  }
+
+  /** Through a checkpoint file manager on `abstractFs` (the `file:`
+    * `AbstractFileSystem` class) under `root`: `mkdirs` a nested dir, then
+    * an atomic write and an atomic overwrite of a log file. Returns the
+    * listing and the mode and bytes of everything in it. */
+  private def checkpointLayout(umask: String, abstractFs: String,
+                               root: String) = {
+    val c = conf(umask)
+    c.set("fs.AbstractFileSystem.file.impl", abstractFs)
+    assert(AbstractFileSystem.createFileSystem(URI.create("file:///"), c)
+      .getClass.getName == abstractFs)
+    val dir = new Path(s"file://$root/offsets/n")
+    val fm = CheckpointFileManager.create(dir, c)
+    fm.mkdirs(dir)
+    Seq(("0", false, "v1\n{}"), ("1", false, "v1\n{\"n\":1}"),
+      ("1", true, "v1\n{\"n\":2}")).foreach { case (name, over, text) =>
+      val out = fm.createAtomic(new Path(dir, name), over)
+      out.write(text.getBytes("UTF-8")); out.close()
+    }
+    val walk = Files.walk(Paths.get(root))
+    try walk.iterator().asScala.toSeq.map { p =>
+      val rel = Paths.get(root).relativize(p).toString
+      val bytes = if (Files.isRegularFile(p)) Files.readAllBytes(p).toSeq
+        else Seq.empty
+      (rel, mode(p.toString), bytes)
+    }.sortBy(_._1) finally walk.close()
+  }
+
+  test("checkpoint writes through CheckpointFileManager: ForkFreeLocalFs " +
+    "leaves the stock LocalFs files, .crc sidecars, dirs and modes " +
+    "under umask 022 and 077") {
+    val stockFs = classOf[org.apache.hadoop.fs.local.LocalFs].getName
+    Seq("022", "077").foreach { umask =>
+      val want = checkpointLayout(umask, stockFs, tmp("cpstock"))
+      assert(want.map(_._1).contains("offsets/n/.1.crc"), want.map(_._1))
+      val got = checkpointLayout(umask, classOf[ForkFreeLocalFs].getName,
+        tmp("cpforkfree"))
+      assert(got == want, s"umask $umask")
+    }
+  }
+
+  test("getFileLinkStatus matches stock RawLocalFileSystem on a file, a " +
+    "dir, a missing path, a live and a dangling symlink") {
+    val Seq(stock, forkFree) = Seq(new RawLocalFileSystem,
+      new ForkFreeRawLocalFileSystem).map { fs =>
+      fs.initialize(URI.create("file:///"), conf("022")); fs
+    }
+    val root = tmp("links")
+    Files.createDirectory(Paths.get(root, "dir"))
+    Files.write(Paths.get(root, "file"), "abc".getBytes("UTF-8"))
+    Files.createSymbolicLink(Paths.get(root, "live"), Paths.get(root, "file"))
+    Files.createSymbolicLink(Paths.get(root, "dangling"),
+      Paths.get(root, "gone"))
+    // FileStatus.equals compares paths only; toString has every field
+    def status(fs: FileSystem, p: Path) =
+      Try(fs.getFileLinkStatus(p)).map(_.toString)
+    Seq("file", "dir", "missing", "live", "dangling").foreach { name =>
+      // stock Hadoop reads a qualified path's link as the file it points
+      // at, an unqualified one as a link: both forms
+      Seq(new Path(s"$root/$name"), new Path(s"file://$root/$name"))
+        .foreach { p =>
+          val want = status(stock, p)
+          assert(status(forkFree, p).toString == want.toString, p)
+        }
+    }
+    assert(Try(forkFree.getFileLinkStatus(new Path(s"$root/missing")))
+      .failed.get.isInstanceOf[FileNotFoundException])
+    Seq("live", "dangling").foreach { name =>
+      assert(forkFree.getFileLinkStatus(new Path(s"$root/$name")).isSymlink,
+        name)
+    }
   }
 }

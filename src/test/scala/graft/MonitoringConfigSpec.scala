@@ -42,26 +42,6 @@ class MonitoringConfigSpec extends SparkTestBase {
     } finally s.streams.removeListener(listener)
   }
 
-  test("GraftConfig: properties load with defaults and overrides") {
-    val d = GraftConfig.fromProperties(new java.util.Properties())
-    assert(d == GraftConfig())
-    val f = Files.createTempFile("graft", ".properties")
-    Files.writeString(f,
-      """spark.streaming.batchInterval=5000
-        |spark.streaming.write-cache=42
-        |retryTime=7
-        |partners= p1 , p2
-        |socket.port=1234
-        |""".stripMargin)
-    val c = GraftConfig.load(f.toString)
-    assert(c.batchIntervalMs == 5000L)
-    assert(c.writeCacheRecords == 42)
-    assert(c.sinkRetries == 7)
-    assert(c.partners == Seq("p1", "p2"))
-    assert(c.socketPort == 1234)
-    assert(c.socketHost == "localhost") // default preserved
-  }
-
   test("readStreamUnion merges spool dirs with bag semantics (S3)") {
     val s = spark
     val d1 = tmpDir("u1"); val d2 = tmpDir("u2")

@@ -1,6 +1,9 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.FileSystem
 import org.apache.spark.sql.DataFrame
@@ -9,9 +12,9 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.operators.{CdrOps, TableSpec}
-import graft.sinks.{ForkFreeRawLocalFileSystem, FtpLikeSink}
+import graft.sinks.{ForkFreeLocalFs, ForkFreeRawLocalFileSystem, FtpLikeSink}
 import graft.sources.FlumeLikeSource
-import graft.streaming.CdrStreaming
+import graft.streaming.{CdrStreaming, MicroBatch}
 
 class StreamingSpec extends SparkTestBase {
 
@@ -775,6 +778,44 @@ class StreamingSpec extends SparkTestBase {
       .select(col("dt"), col("record_type")).distinct().collect()
       .map(r => (r.get(0).toString, r.get(1).toString)).toSet
     assert(parts == Set(("20160114", "61")))
+  }
+
+  test("checkpoint compatibility: MicroBatch restarts a query on a " +
+    "checkpoint a stock-conf writeStream wrote, at the next batch, with " +
+    "no replay and no duplicate output") {
+    val key = "fs.AbstractFileSystem.file.impl"
+    val src = tmpDir("compat_src")
+    val cp = tmpDir("compat_cp")
+    val seen = new ConcurrentLinkedQueue[(Long, String)]()
+    val record: (DataFrame, Long) => Unit = (batch, batchId) =>
+      batch.collect().foreach(r => seen.add(batchId -> r.getString(0)))
+    Files.write(Paths.get(src, "a.txt"), "a1\na2\n".getBytes("UTF-8"))
+    // run 1: a fresh session, untouched by any MicroBatch start, writes
+    // the checkpoint through Hadoop's stock file: AbstractFileSystem
+    val stock = spark.newSession()
+    assert(stock.sessionState.newHadoopConf().get(key) ==
+      classOf[org.apache.hadoop.fs.local.LocalFs].getName)
+    val q1 = stock.readStream.format("text").load(src).writeStream
+      .foreachBatch(record).option("checkpointLocation", cp)
+      .trigger(Trigger.ProcessingTime(0)).start()
+    q1.processAllAvailable()
+    q1.stop()
+    Files.write(Paths.get(src, "b.txt"), "b1\n".getBytes("UTF-8"))
+    // run 2: the same checkpoint, restarted through MicroBatch
+    val restarted = spark.newSession()
+    val q2 = MicroBatch.start(restarted.readStream.format("text").load(src),
+      cp, Trigger.ProcessingTime(0))(record)
+    q2.processAllAvailable()
+    q2.stop()
+    assert(restarted.sessionState.newHadoopConf().get(key) ==
+      classOf[ForkFreeLocalFs].getName)
+    assert(seen.asScala.toSeq.sorted ==
+      Seq(0L -> "a1", 0L -> "a2", 1L -> "b1"))
+    // batch 1's offsets and commit, with their .crc, on the old checkpoint
+    Seq("offsets", "commits").foreach { log =>
+      Seq("1", ".1.crc").foreach(f =>
+        assert(Files.isRegularFile(Paths.get(cp, log, f)), s"$log/$f"))
+    }
   }
 
   test("StreamingKnn.serve: streamed probes against the persisted " +

@@ -1,7 +1,7 @@
 #!/usr/bin/env bash
-# Count the child processes a command starts through chmod, ls, stat, chown
-# and bash -- the programs Hadoop's local FileSystem forks when the native
-# Hadoop library is not loaded.
+# Count the child processes a command starts through chmod, readlink, ls,
+# stat, chown and bash -- the programs Hadoop's local FileSystem forks when
+# the native Hadoop library is not loaded.
 #
 #   tools/fork_census.sh [--root NAME] <command...>
 #
@@ -11,8 +11,9 @@
 # output subtree. A subtree is the directory holding the path the program
 # acted on, cut to its first two components below the last path component
 # named NAME (default: below the current directory; a path outside it
-# keeps its leading `/`); digits in `=N` values and all-digit components
-# read as N. Example, one traced benchmark run:
+# keeps its leading `/`; a `file:` scheme is dropped first); digits in
+# `=N` values and all-digit components read as N. Example, one traced
+# benchmark run:
 #
 #   tools/fork_census.sh --root out \
 #     python3 perfbench/run.py --workload cdr_stream --seed 1 --trace 1
@@ -27,7 +28,7 @@ trap 'rm -rf "$dir"' EXIT
 mkdir "$dir/bin"
 log="$dir/forks.tsv"
 : > "$log"
-for prog in chmod ls stat chown bash; do
+for prog in chmod readlink ls stat chown bash; do
   real=$(command -v "$prog") || continue
   cat > "$dir/bin/$prog" <<EOF
 #!/bin/sh
@@ -44,6 +45,7 @@ PATH="$dir/bin:$PATH" "$@" || status=$?
 
 awk -F'\t' -v root="$root" -v cwd="$PWD" '
   function subtree(p,   i, off, n, c, j, key, cut) {
+    sub(/^file:/, "", p)
     if (substr(p, 1, 1) != "/") return "(no path)"
     if (root != "") {
       off = 0  # cut below the LAST component named root
@@ -65,10 +67,10 @@ awk -F'\t' -v root="$root" -v cwd="$PWD" '
   { total++; prog[$1]++; sub_[$1 "\t" subtree($2)]++ }
   END {
     printf "fork census: %d forks\n", total
-    for (p in prog) printf "  %-6s %7d\n", p, prog[p] | "sort -k2,2nr"
+    for (p in prog) printf "  %-8s %7d\n", p, prog[p] | "sort -k2,2nr"
     close("sort -k2,2nr")
     print "by program and subtree:"
-    for (k in sub_) { split(k, a, "\t"); printf "  %-6s %7d  %s\n", a[1], sub_[k], a[2] | "sort -k2,2nr" }
+    for (k in sub_) { split(k, a, "\t"); printf "  %-8s %7d  %s\n", a[1], sub_[k], a[2] | "sort -k2,2nr" }
     close("sort -k2,2nr")
   }' "$log" >&2
 
